@@ -1883,7 +1883,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_bpeish_tokens": text_bpeish_tokens,
         "f_levenshtein": f_levenshtein,
         "mixture_interleave": mixture_interleave_gate,
-        "dedup_lsh_pairs": dedup_lsh_pairs,
         "w6_turn_ordering_invariant": w6_turn_ordering_invariant,
         "pack_sequences": pack_sequences_gate,
         "chunk_manifest": chunk_manifest_gate,

@@ -18,6 +18,7 @@ no per-row Spark UDFs anywhere (BASELINE.json input_hint).
 from __future__ import annotations
 
 import hashlib
+from functools import lru_cache
 
 import numpy as np
 
@@ -33,6 +34,8 @@ _NGRAM = 3
 EMBEDDER_VERSION = 1
 
 
+# a text's n-grams come from a small alphabet and repeat across texts
+@lru_cache(maxsize=1 << 16)
 def _ngram_hash(ngram: bytes) -> int:
     return int.from_bytes(
         hashlib.blake2b(ngram, digest_size=8).digest(), "big", signed=False

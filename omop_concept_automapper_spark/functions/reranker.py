@@ -23,10 +23,14 @@ from __future__ import annotations
 
 import math
 import re
+from functools import lru_cache
 
 _TOKEN_RE = re.compile(r"[a-z0-9]+")
 
 
+# concept names recur across every mention's candidate list; the cached
+# value is an immutable frozenset, safe to share between callers
+@lru_cache(maxsize=1 << 16)
 def _tokens(text: str) -> frozenset[str]:
     return frozenset(_TOKEN_RE.findall(text.lower())) if text else frozenset()
 

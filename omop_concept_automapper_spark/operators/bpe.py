@@ -29,6 +29,7 @@ without compression).
 
 from __future__ import annotations
 
+import warnings
 from collections import Counter
 
 from pyspark.sql import Column, DataFrame
@@ -114,6 +115,9 @@ def _merge_loop_local(
     return out
 
 
+_LOCAL_SYMBOLS_DEFAULT = 1 << 20  # see the local fast path in learn_bpe_merges
+
+
 def learn_bpe_merges(
     docs: DataFrame,
     n_merges: int,
@@ -162,9 +166,17 @@ def learn_bpe_merges(
     if local_threshold_symbols is None:
         import os as _os
 
-        local_threshold_symbols = int(
-            _os.environ.get("SPARK_GRAFT_BPE_LOCAL_SYMBOLS", "1048576")
-        )
+        local_threshold_symbols = _LOCAL_SYMBOLS_DEFAULT
+        raw = _os.environ.get("SPARK_GRAFT_BPE_LOCAL_SYMBOLS")
+        if raw is not None:
+            try:
+                local_threshold_symbols = int(raw)
+            except ValueError:
+                warnings.warn(
+                    f"SPARK_GRAFT_BPE_LOCAL_SYMBOLS={raw!r} is not an integer; "
+                    f"using the default {_LOCAL_SYMBOLS_DEFAULT}",
+                    stacklevel=2,
+                )
     if local_threshold_symbols > 0:
         stats = words.agg(
             F.sum(F.size("s")).alias("n_sym")

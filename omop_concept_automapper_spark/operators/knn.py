@@ -20,10 +20,17 @@ executors; scoring is a blocked matrix multiply inside ``mapInPandas``
 (Arrow batches, no per-row Python in the hot loop).  Retrieval and rerank
 happen in the SAME task — no extra shuffle between stages.  At 100 TB /
 full-OMOP scale the matrix (~4M x 1024 float32 ≈ 16 GB) exceeds a single
-broadcast: ``block_rows`` already bounds working memory, and the index dict
-is shard-able (score per shard, union partial top-k, re-reduce — exact
-semantics preserved; tie-break (-score, concept_id) makes shard merges
-order-stable, SURVEY.md hard part (f)).
+broadcast: the top-k kernel scores a fixed chunk of queries against one
+``block_rows`` slice at a time, so working memory is O(chunk × block_rows),
+and the index dict is shard-able (score per shard, union partial top-k,
+re-reduce — exact semantics preserved; tie-break (-score, concept_id) makes
+shard merges order-stable, SURVEY.md hard part (f)).
+
+Batch independence: the gemm only preselects candidates; they are ranked
+and scored by a per-pair dot product, so a mention's candidates, chosen
+concept and score do not depend on which other mentions share its batch.
+That is what lets the file-index linker split its input round-robin over
+every core without changing a single output row.
 """
 
 from __future__ import annotations
@@ -125,6 +132,10 @@ def _topk_masked(
 
 
 _IDX_BITS = 24  # supports vocabularies up to 2^24 (~16.7M) concepts
+_PAD_KEY = np.iinfo(np.int64).min  # below every real key, -inf scores included
+_QUERY_CHUNK = 256  # queries per gemm: bounds the working set at chunk x block_rows
+_PAIR_SLICE = 1 << 20  # gathered vector elements per rescoring slice
+_F32_UNIT_ROUNDOFF = 2.0**-24
 
 
 def _order_keys(scores: np.ndarray, col_idx: np.ndarray) -> np.ndarray:
@@ -142,8 +153,44 @@ def _order_keys(scores: np.ndarray, col_idx: np.ndarray) -> np.ndarray:
     return (mono << _IDX_BITS) | ((np.int64(1 << _IDX_BITS) - 1) - col_idx)
 
 
+_NEG_INF_KEY = _order_keys(np.float32(-np.inf).reshape(1, 1), np.zeros(1, np.int64))[0, 0]
+
+
 def _decode_idx(keys: np.ndarray) -> np.ndarray:
     return (np.int64(1 << _IDX_BITS) - 1) - (keys & np.int64((1 << _IDX_BITS) - 1))
+
+
+def _decode_score(keys: np.ndarray) -> np.ndarray:
+    """The float32 score a key was built from (inverse of ``_order_keys``)."""
+    mono = keys >> _IDX_BITS
+    b = np.where(mono >= 0, mono, np.int64(-2147483648) - mono)
+    return b.astype(np.int32).view(np.float32)
+
+
+def _pair_scores(q: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Row-wise dot products ``q[i] . v[i]``, accumulated in float64 and
+    rounded to float32.  Each value depends on its own pair only — never on
+    which other rows share the call — which is what makes the linker's
+    ranking independent of how mentions are batched."""
+    return (q.astype(np.float64) * v).sum(axis=1).astype(np.float32)
+
+
+def _merge_topk(
+    run: np.ndarray, rows: np.ndarray, keys: np.ndarray
+) -> np.ndarray:
+    """Merge ragged (row, key) candidates into the running (n, width) top
+    keys: per row, the ``width`` largest of both, sorted descending."""
+    n, width = run.shape
+    all_rows = np.concatenate([np.repeat(np.arange(n), width), rows])
+    all_keys = np.concatenate([run.ravel(), keys])
+    order = np.lexsort((~all_keys, all_rows))  # row asc, key desc
+    all_rows, all_keys = all_rows[order], all_keys[order]
+    counts = np.bincount(all_rows, minlength=n)
+    rank = np.arange(all_rows.size) - np.repeat(np.cumsum(counts) - counts, counts)
+    keep = rank < width
+    out = np.empty_like(run)
+    out[all_rows[keep], rank[keep]] = all_keys[keep]
+    return out
 
 
 def _blocked_topk(
@@ -155,16 +202,35 @@ def _blocked_topk(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact streaming top-k over a sharded vocabulary matrix.
 
-    ``shards`` is a list of (global_row_offset, matrix_slice); scoring
-    streams block by block within each shard, keeping a running per-query
-    top-k of composite keys.  Peak memory is O(batch × block_rows), never
-    O(batch × vocab), and because keys are globally unique the shard merge
-    is EXACT — this is what lets a full-OMOP index (16 GB) ship as several
-    independent broadcasts (SCALE.md).  Returns
-    (keys (n,k) int64 sorted desc, count of valid candidates per row)."""
-    n_q = q.shape[0]
-    run = np.full((n_q, 0), np.iinfo(np.int64).min, dtype=np.int64)
-    neg_inf_key = _order_keys(np.float32(-np.inf).reshape(1, 1), np.zeros(1, np.int64))[0, 0]
+    ``shards`` is a list of (global_row_offset, matrix_slice).  Queries are
+    scored ``_QUERY_CHUNK`` at a time against one ``block_rows`` slice of a
+    shard at a time, so peak memory is O(chunk × block_rows), never
+    O(batch × vocab).  Per block, the float32 gemm only PRESELECTS: every
+    column scoring at least the row's k-th gemm score minus a rounding
+    margin survives, and survivors are rescored with a per-pair dot product
+    (``_pair_scores``).  Ranking uses the per-pair scores alone, so a row's
+    result does not depend on the other queries in the batch (BLAS rounds
+    the same dot product differently across call shapes).
+
+    The margin is sound: a float32 gemm score of length d lies within
+    (d + 2) u ‖q‖ ‖v‖ of its per-pair rescoring (u = 2^-24), so a column in
+    the per-pair top-k has a gemm score of at least the row's k-th gemm
+    score minus twice that.  The margin doubles it again, to absorb the
+    rounding of the norms and of the threshold itself, and is taken below a
+    lower bound on the k-th gemm score (the k-th largest of >= 8k column
+    group maxima), which only admits more survivors.
+
+    Survivor keys are globally unique composite keys, so block and shard
+    merges are EXACT — this is what lets a full-OMOP index (16 GB) ship as
+    several independent broadcasts (SCALE.md).  Returns (keys (n, w) int64
+    sorted desc with w = min(k, vocab), count of valid candidates per row);
+    slots past a row's valid count hold keys <= ``_NEG_INF_KEY``."""
+    n_q, dim = q.shape
+    width = min(k, sum(m.shape[0] for _, m in shards))
+    run = np.full((n_q, width), _PAD_KEY, dtype=np.int64)
+    q_norm = np.linalg.norm(q.astype(np.float64), axis=1)
+    rel_margin = 4.0 * (dim + 2) * _F32_UNIT_ROUNDOFF
+    pair_step = max(1, _PAIR_SLICE // max(dim, 1))
     for offset, matrix in shards:
         n_v = matrix.shape[0]
         if offset + n_v > (1 << _IDX_BITS):
@@ -173,24 +239,45 @@ def _blocked_topk(
                 "capacity; widen _IDX_BITS"
             )
         for start in range(0, n_v, block_rows):
-            end = min(start + block_rows, n_v)
-            s = q @ matrix[start:end].T
+            block = matrix[start : start + block_rows]
+            n_b = block.shape[0]
+            kk = min(width, n_b)
+            if kk == 0:
+                continue
+            masked = None
             if base_mask is not None:
-                s[:, ~base_mask[offset + start : offset + end]] = -np.inf
-            keys = _order_keys(
-                s, np.arange(offset + start, offset + end, dtype=np.int64)
-            )
-            kk = min(k, end - start)
-            if end - start > kk:
-                part = np.argpartition(keys, -kk, axis=1)[:, -kk:]
-                keys = np.take_along_axis(keys, part, axis=1)
-            cat = np.concatenate([run, keys], axis=1)
-            if cat.shape[1] > k:
-                sel = np.argpartition(cat, -k, axis=1)[:, -k:]
-                cat = np.take_along_axis(cat, sel, axis=1)
-            run = cat
-    run = -np.sort(-run, axis=1)  # final order: score desc, concept_id asc
-    valid_counts = (run > (neg_inf_key | np.int64((1 << _IDX_BITS) - 1))).sum(axis=1)
+                masked = ~base_mask[offset + start : offset + start + n_b]
+            v_max = float(np.sqrt(np.einsum("ij,ij->i", block, block).max()))
+            # >= 8 kk column groups: partitioning their maxima is a fraction
+            # of the cost of partitioning every score
+            group_starts = np.arange(0, n_b, max(1, n_b // (8 * kk)))
+            n_g = group_starts.size
+            margin = (rel_margin * v_max) * q_norm
+            for c0 in range(0, n_q, _QUERY_CHUNK):
+                c1 = min(c0 + _QUERY_CHUNK, n_q)
+                qc = q[c0:c1]
+                s = qc @ block.T
+                if masked is not None:
+                    s[:, masked] = -np.inf
+                # the kk-th largest group maximum is a lower bound on the
+                # kk-th largest score (kk groups reach it); a row with fewer
+                # than kk groups holding a valid column gets -inf, and its
+                # threshold clamps to the lowest finite float, which drops
+                # the masked columns
+                g_max = np.maximum.reduceat(s, group_starts, axis=1)
+                kth = np.partition(g_max, n_g - kk, axis=1)[:, n_g - kk]
+                thr = np.maximum(
+                    kth - margin[c0:c1], np.finfo(np.float32).min
+                ).astype(np.float32)
+                rows, cols = np.nonzero(s >= thr[:, None])
+                del s
+                scores = np.empty(rows.size, dtype=np.float32)
+                for a in range(0, rows.size, pair_step):
+                    b = a + pair_step
+                    scores[a:b] = _pair_scores(qc[rows[a:b]], block[cols[a:b]])
+                keys = _order_keys(scores, cols + np.int64(offset + start))
+                run[c0:c1] = _merge_topk(run[c0:c1], rows, keys)
+    valid_counts = (run > _NEG_INF_KEY).sum(axis=1)
     return run, valid_counts
 
 
@@ -286,11 +373,15 @@ def link_batch(
     if target_domains:
         base_mask = np.isin(index["domain_id"], np.asarray(target_domains, object))
 
-    k_max = max(k_standard, k_drug)
-    top_keys, _ = _blocked_topk(q, shards, k_max, base_mask, block_rows)
-    neg_inf_key = _order_keys(
-        np.float32(-np.inf).reshape(1, 1), np.zeros(1, np.int64)
-    )[0, 0]
+    # a row whose embedding failed is quarantined below; its zero vector
+    # would tie every concept, so only embedded rows are ranked
+    live = np.ones(len(texts), dtype=bool)
+    live[list(embed_errors)] = False
+    top_keys, n_valid = _blocked_topk(
+        q[live], shards, max(k_standard, k_drug), base_mask, block_rows
+    )
+    top_idx, top_score = _decode_idx(top_keys), _decode_score(top_keys)
+    key_row = np.cumsum(live) - 1
 
     for row_i, (mention_id, mention_id2, text, is_drug, atc7) in enumerate(
         zip(pdf["mention_id"], mid2, pdf["mention_text"], pdf["is_drug"], pdf["atc7"])
@@ -318,26 +409,15 @@ def link_batch(
                     allowed = allowed[base_mask[allowed]]
                 if allowed is None or allowed.size == 0:
                     continue  # zero hits -> no mapping (auto_mapper.py:76-77)
-                sub_scores = _gather_rows(shards, allowed) @ q[row_i]
+                sub_scores = _pair_scores(q[row_i], _gather_rows(shards, allowed))
                 sub_top = _topk_masked(sub_scores, concept_ids[allowed], k)
-                top = allowed[sub_top]
-                row_scores_of = {
-                    int(a): float(s)
-                    for a, s in zip(allowed[sub_top], sub_scores[sub_top])
-                }
+                top, top_scores = allowed[sub_top], sub_scores[sub_top]
             else:
-                keys = top_keys[row_i]
-                keys = keys[keys > neg_inf_key][:k]
-                if keys.size == 0:
+                r = key_row[row_i]
+                n_top = min(k, n_valid[r])
+                if n_top == 0:
                     continue  # zero hits -> no mapping (auto_mapper.py:76-77)
-                top = _decode_idx(keys)
-                row_scores_of = {
-                    int(t): float(s)
-                    for t, s in zip(
-                        top,
-                        (_gather_rows(shards, top) @ q[row_i]).astype(np.float32),
-                    )
-                }
+                top, top_scores = top_idx[r, :n_top], top_score[r, :n_top]
             cand_names = [str(names[j]) for j in top]
             # default resolves the module global at call time (test seam);
             # an injected rerank_fn goes through the retry policy
@@ -353,9 +433,9 @@ def link_batch(
                     int(mention_id), int(mention_id2), str(text), is_drug,
                     str(atc7 or ""),
                     int(concept_ids[chosen]), str(names[chosen]),
-                    row_scores_of[int(chosen)], int(confidence), int(k),
+                    float(top_scores[sel]), int(confidence), int(k),
                     int(top.size), method,
-                    [int(concept_ids[j]) for j in top], None,
+                    concept_ids[top].tolist(), None,
                 )
             )
         except Exception as exc:  # per-row quarantine (auto_mapper.py:207-211)
@@ -382,10 +462,10 @@ def link_batch(
 # Driver peak memory is O(n_ids) — the sorted concept_id list used to place
 # block-aligned shard boundaries — never O(n x d).
 #
-# Exactness: shard boundaries are block_rows multiples of the same global
-# concept_id order the in-memory path uses, so every gemm call is
-# shape-identical and results are bitwise equal to the single-broadcast
-# plan (tests/test_operators.py::test_file_index_exact_equality).
+# Exactness: shards follow the same global concept_id order the in-memory
+# path uses, and ranking uses per-pair scores that no gemm shape affects,
+# so results equal the single-broadcast plan's row for row
+# (tests/test_operators.py::test_file_index_exact_equality).
 # ---------------------------------------------------------------------------
 
 _META_COLUMNS = ["concept_id", "concept_name", "domain_id", "atc7_codes"]
@@ -564,6 +644,19 @@ def _select_link_input(mentions: DataFrame) -> DataFrame:
     )
 
 
+def _link_partitions(mentions: DataFrame) -> int:
+    """Partitions for the link ``mapInPandas``: max(input partitions,
+    default parallelism), so a one-file mention table still links on every
+    core.  An input plan with an exchange runs adaptively, and asking it for
+    its partition count would run its query stages (a job, and AQE may yet
+    coalesce them), so for it the default parallelism alone decides."""
+    n = mentions.sparkSession.sparkContext.defaultParallelism
+    plan = mentions._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        n = max(n, mentions.rdd.getNumPartitions())
+    return n
+
+
 def link_mentions_file_index(
     spark: SparkSession,
     mentions: DataFrame,
@@ -580,15 +673,21 @@ def link_mentions_file_index(
 
     No broadcast, no driver-resident matrix: each executor process loads
     the shard files once (cache above) from shared storage — the shape a
-    16 GB full-OMOP index needs on a 1000-executor cluster.
+    16 GB full-OMOP index needs on a 1000-executor cluster.  The input is
+    spread round-robin over max(input partitions, default parallelism)
+    partitions (``_link_partitions``) before the one ``mapInPandas``, so a
+    small mention table still links on every core; since results are
+    batch-independent, the split changes no output row.
     ``embed_fn``/``rerank_fn``/``retry_policy`` = the model-endpoint seam
     (see ``link_batch``); callables must be picklable.
     """
     domains = list(target_domains) if target_domains else None
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = load_vocab_index_files(index_path)
+        idx = None  # loaded on the first batch: a small input leaves tasks empty
         for pdf in batches:
+            if idx is None:
+                idx = load_vocab_index_files(index_path)
             yield link_batch(
                 pdf, idx, k_standard=k_standard, k_drug=k_drug,
                 target_domains=domains, block_rows=block_rows,
@@ -596,7 +695,11 @@ def link_mentions_file_index(
                 retry_policy=retry_policy,
             )
 
-    return _select_link_input(mentions).mapInPandas(run, schema=LINK_RESULT_SCHEMA)
+    return (
+        _select_link_input(mentions)
+        .repartition(_link_partitions(mentions))
+        .mapInPandas(run, schema=LINK_RESULT_SCHEMA)
+    )
 
 
 def link_mentions(
@@ -616,11 +719,10 @@ def link_mentions(
 
     ``n_shards > 1`` ships the embedding matrix as that many independent
     broadcasts (the full-OMOP path where one 16 GB broadcast is
-    impractical); shard boundaries are aligned to ``block_rows`` multiples
-    so every configuration issues bitwise-identical gemm calls — BLAS
-    results can differ at the last ulp across matrix shapes, which would
-    otherwise flip near-tied tail candidates.  Results are therefore
-    EXACTLY equal to the single-broadcast plan
+    impractical); shard boundaries are aligned to ``block_rows`` multiples.
+    BLAS results can differ at the last ulp across matrix shapes, but the
+    kernel ranks by per-pair scores, so results are EXACTLY equal to the
+    single-broadcast plan
     (tests/test_operators.py::test_sharded_index_exact_equality).
     """
     index = build_vocab_index(vocab_pdf)

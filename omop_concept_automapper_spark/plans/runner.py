@@ -275,11 +275,15 @@ class Pipeline:
                 f"{fp_d['vocab_n']}:{fp_d['vocab_h']}:e{fp_d['embedder_v']}"
             ),
         )
+        # the linker spreads its input over every core; the rebalance lets
+        # AQE size the written files instead (one file for a small table),
+        # since every later fold reads the links table in dozens of jobs and
+        # each extra file adds a task to each of them
         results = link_mentions_file_index(
             self.spark, todo, index_path,
             k_standard=self.cfg.k_standard, k_drug=self.cfg.k_drug,
             target_domains=self.cfg.target_domains,
-        )
+        ).hint("rebalance")
         if already is None:
             snap = tbl.overwrite(results, metrics={"link_config": fp})
         elif already.where(F.col("error").isNotNull()).isEmpty():

@@ -8,6 +8,7 @@ import random
 
 import pytest
 
+from omop_concept_automapper_spark.operators import bpe as bpe_mod
 from omop_concept_automapper_spark.operators.bpe import (
     learn_bpe_merges,
     sequential_bpe_merges,
@@ -100,9 +101,30 @@ def test_local_fast_path_equals_distributed_loop(spark, seed):
     assert len(local) > 2
 
 
-def test_local_fast_path_default_threshold_and_empty(spark):
+def test_malformed_local_symbols_setting_falls_back_to_default(spark, monkeypatch):
+    """A malformed threshold warns and keeps the 2^20-symbol default, so a
+    tiny corpus still takes the local loop."""
+    texts = ["pack my box", "pack my bag"]
+    want = sequential_bpe_merges(texts, 4)
+    calls = []
+    real = bpe_mod._merge_loop_local
+
+    def spy(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(bpe_mod, "_merge_loop_local", spy)
+    monkeypatch.setenv("SPARK_GRAFT_BPE_LOCAL_SYMBOLS", "1e6")
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_BPE_LOCAL_SYMBOLS='1e6'"):
+        got = learn_bpe_merges(_df(spark, texts), 4)
+    assert got == want
+    assert len(calls) == 1  # the local loop ran: the default held
+
+
+def test_local_fast_path_default_threshold_and_empty(spark, monkeypatch):
     # the env-default threshold routes a tiny corpus through the local
     # loop (same answer), and an all-null corpus yields no merges
+    monkeypatch.delenv("SPARK_GRAFT_BPE_LOCAL_SYMBOLS", raising=False)
     texts = ["pack my box", "pack my bag"]
     assert learn_bpe_merges(_df(spark, texts), 4) == sequential_bpe_merges(
         texts, 4

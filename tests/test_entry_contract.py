@@ -4,8 +4,10 @@ order-insensitive, column-name-sorted, exact values."""
 
 from __future__ import annotations
 
+import ast
 import decimal
 import math
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -68,6 +70,20 @@ def test_every_query_has_oracle_or_reason():
     # via golden VALUES from the sequential reference oracle, ann_ivf_topk
     # via full-probe (== exact brute force) SQL
     assert set(QUERIES) - set(ORACLES) == set()
+
+
+def test_queries_dict_literals_repeat_no_key():
+    """A repeated key in a dict literal silently keeps only its last value,
+    so ``queries()`` would hide one registration behind another."""
+    tree = ast.parse(Path(entry_mod.__file__).read_text())
+    fn = next(
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "queries"
+    )
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Dict):
+            keys = [ast.unparse(k) for k in node.keys if k is not None]
+            repeated = sorted({k for k in keys if keys.count(k) > 1})
+            assert not repeated, f"line {node.lineno}: repeated keys {repeated}"
 
 
 def test_entry_smoke(spark):

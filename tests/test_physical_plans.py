@@ -161,6 +161,90 @@ def test_linker_single_pass_no_extra_shuffle(spark):
     assert simple.count("MapInPandas") == 1
 
 
+def test_file_index_linker_spreads_over_every_core(spark, tmp_path):
+    """The file-index linker round-robins its input over at least
+    defaultParallelism partitions directly under its one MapInPandas, so a
+    one-file mention table no longer links in a single task."""
+    import re
+
+    from omop_concept_automapper_spark.fixtures.vocabulary import vocab_dataframes
+    from omop_concept_automapper_spark.operators.knn import (
+        build_vocab_index_files,
+        link_mentions_file_index,
+    )
+    from omop_concept_automapper_spark.plans.vocab_prep import (
+        build_vocab_embeddings,
+    )
+
+    vocab = build_vocab_embeddings(*vocab_dataframes(spark)).select(
+        "concept_id", "concept_name", "domain_id", "atc7_codes", "vector"
+    )
+    idx_path = str(tmp_path / "vocab_index")
+    build_vocab_index_files(vocab, idx_path)
+    spark.createDataFrame(
+        [(i, 0, f"mention {i}", False, "") for i in range(40)],
+        "mention_id long, mention_id2 long, mention_text string, "
+        "is_drug boolean, atc7 string",
+    ).coalesce(1).write.parquet(str(tmp_path / "mentions"))
+    mentions = spark.read.parquet(str(tmp_path / "mentions"))
+    assert mentions.rdd.getNumPartitions() == 1
+
+    lines = plan_str(
+        link_mentions_file_index(spark, mentions, idx_path), mode="simple"
+    ).splitlines()
+    rr = [i for i, line in enumerate(lines) if "RoundRobinPartitioning" in line]
+    assert len(rr) == 1, lines
+    n = int(re.search(r"RoundRobinPartitioning\((\d+)\)", lines[rr[0]]).group(1))
+    assert n >= spark.sparkContext.defaultParallelism
+    assert sum("MapInPandas" in line for line in lines) == 1
+    assert "MapInPandas" in lines[rr[0] - 1], lines
+
+
+def test_resume_noop_fold_runs_no_link_job(spark, tmp_path, monkeypatch):
+    """A fold whose mentions are all linked already skips the linker: no
+    link job is even planned, and the stage records the no-op."""
+    import datetime
+
+    from omop_concept_automapper_spark.catalog import Warehouse
+    from omop_concept_automapper_spark.plans.runner import Pipeline, PipelineConfig
+
+    concept = spark.createDataFrame(
+        [(9001, "zymotrex", "Condition", "SNOMED", "Clinical Finding", "S", "Z1")],
+        "concept_id int, concept_name string, domain_id string, "
+        "vocabulary_id string, concept_class_id string, "
+        "standard_concept string, concept_code string",
+    )
+    rel = spark.createDataFrame(
+        [],
+        "concept_id_1 int, concept_id_2 int, relationship_id string, "
+        "invalid_reason string",
+    )
+    anc = spark.createDataFrame([], "ancestor_concept_id int, descendant_concept_id int")
+    lexicon = [{"mention_text": "zymotrex", "is_drug": False}]
+
+    def turns(conv):
+        return spark.createDataFrame(
+            [(conv, 0, "doctor", "patient shows zymotrex today", None,
+              datetime.datetime(2026, 1, 1))],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string, ts timestamp",
+        )
+
+    pipe = Pipeline(spark, Warehouse(spark, str(tmp_path / "wh")), PipelineConfig())
+    pipe.run(turns("c1"), concept, rel, anc, lexicon)
+
+    def no_link(*args, **kwargs):
+        raise AssertionError("a resume-no-op fold must not link")
+
+    monkeypatch.setattr(
+        "omop_concept_automapper_spark.plans.runner.link_mentions_file_index",
+        no_link,
+    )
+    out = pipe.run_incremental(turns("c2"), concept, rel, anc, lexicon)
+    assert pipe.wh.stage_metrics("links")["metrics"]["resume_noop"] is True
+    assert [r["obj"] for r in out["edges"].collect()] == [9001]
+
+
 def test_occurrence_write_is_range_partitioned_on_conv(spark):
     """North rule: explicit range partitioning on conv_id — the runner's
     occurrence stage repartitions by (conv_id, turn_idx) range before the
