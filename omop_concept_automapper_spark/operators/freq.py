@@ -352,22 +352,21 @@ def winsorize(
         raise ValueError("need 0 < lo_bp <= hi_bp <= 10000")
     group_cols = group_cols or []
     q = exact_quantiles(df, value_col, [lo_bp, hi_bp], group_cols)
-    bounds = (
-        q.groupBy(*group_cols)
-        .agg(
-            F.min(
-                F.when(F.col("q_bp") == lo_bp, F.col(value_col))
-            ).alias("_lo"),
-            F.min(
-                F.when(F.col("q_bp") == hi_bp, F.col(value_col))
-            ).alias("_hi"),
-        )
+    bounds = q.groupBy(*[F.col(c).alias(f"_b_{c}") for c in group_cols]).agg(
+        F.min(
+            F.when(F.col("q_bp") == lo_bp, F.col(value_col))
+        ).alias("_lo"),
+        F.min(
+            F.when(F.col("q_bp") == hi_bp, F.col(value_col))
+        ).alias("_hi"),
     )
-    joined = (
-        df.join(F.broadcast(bounds), group_cols)
-        if group_cols
-        else df.crossJoin(F.broadcast(bounds))
-    )
+    if group_cols:
+        # null-safe, like the groupBy that made the bounds: a NULL group is
+        # clipped to its own bounds instead of being dropped
+        cond = [df[c].eqNullSafe(bounds[f"_b_{c}"]) for c in group_cols]
+        joined = df.join(F.broadcast(bounds), cond)
+    else:
+        joined = df.crossJoin(F.broadcast(bounds))
     v = F.col(value_col)
     return joined.select(
         *df.columns,

@@ -51,6 +51,7 @@ from omop_concept_automapper_spark.functions.reranker import (
     confidence_from_score,
     rerank_scores,
 )
+from omop_concept_automapper_spark.operators.similarity import pinned_topk
 
 LINK_RESULT_SCHEMA = (
     "mention_id long, mention_id2 long, mention_text string, "
@@ -107,28 +108,6 @@ def build_vocab_index(vocab_pdf: pd.DataFrame) -> dict:
         if extra in pdf.columns:
             index[extra] = pdf[extra].to_numpy(object)
     return index
-
-
-def _topk_masked(
-    scores: np.ndarray, concept_ids: np.ndarray, k: int
-) -> np.ndarray:
-    """Exact top-k indices with deterministic (-score, concept_id) order.
-
-    Boundary ties are resolved by selecting ALL rows scoring >= the kth
-    score, sorting by (-score, concept_id), then truncating — so the result
-    never depends on argpartition's arbitrary tie placement (SURVEY.md hard
-    part (f): order-stable shard merges need a pinned tie rule).
-    """
-    valid = np.flatnonzero(scores > -np.inf)
-    if valid.size == 0:
-        return valid
-    if valid.size > k:
-        kth = np.partition(scores[valid], valid.size - k)[valid.size - k]
-        part = valid[scores[valid] >= kth]
-    else:
-        part = valid
-    order = np.lexsort((concept_ids[part], -scores[part]))
-    return part[order][:k]
 
 
 _IDX_BITS = 24  # supports vocabularies up to 2^24 (~16.7M) concepts
@@ -410,7 +389,7 @@ def link_batch(
                 if allowed is None or allowed.size == 0:
                     continue  # zero hits -> no mapping (auto_mapper.py:76-77)
                 sub_scores = _pair_scores(q[row_i], _gather_rows(shards, allowed))
-                sub_top = _topk_masked(sub_scores, concept_ids[allowed], k)
+                _, sub_top = pinned_topk(sub_scores[None, :], concept_ids[allowed], k)
                 top, top_scores = allowed[sub_top], sub_scores[sub_top]
             else:
                 r = key_row[row_i]

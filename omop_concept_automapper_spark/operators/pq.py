@@ -18,8 +18,9 @@ Scale shape:
   m uint8-sized codes, no shuffle;
 * search broadcasts the query LUT tensor (|Q| x m x ks) and emits only a
   per-partition partial top-k (<= |Q| * k rows per partition), then one
-  window over (query_id) finishes the global top-k — the same
-  partial-then-window shape as operators/knn.ann_topk;
+  window over (query_id) finishes the global top-k — the partial-then-merge
+  shape of every kNN operator (``similarity.pinned_topk`` on ``-dist``,
+  then ``similarity.rank_top_k``);
 * composition with IVF: assign vectors to coarse lists first
   (similarity.ivf_topk machinery), PQ-encode within probed lists — the
   two operators share the integer_kmeans quantizer so the composition
@@ -41,11 +42,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from omop_concept_automapper_spark.operators.similarity import (
+    _matrix,
+    _probe_lists,
+    _sample_rows,
+    _sampled_quantizer,
     assign_euclidean,
     integer_kmeans,
+    pinned_topk,
+    rank_top_k,
 )
 
 
@@ -77,26 +83,18 @@ def _encode(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
     ).astype(np.int32)
 
 
-def _sample_rows(
-    embeddings: DataFrame, mod: int, min_rows: int, fallback_rows: int
-) -> np.ndarray:
-    """Deterministic, layout-independent fit sample (the
-    _sampled_quantizer rule: ids at multiples of ``mod``, first-N-by-id
-    fallback when the id distribution starves the modulo sample)."""
+def _query_rows(
+    embeddings: DataFrame, query_ids: Sequence[int]
+) -> tuple[np.ndarray, np.ndarray]:
+    """(vec_ids, vectors) of the queries drawn from the corpus by id,
+    sorted by vec_id — O(|query_ids|) driver rows."""
     pdf = (
-        embeddings.where(F.pmod("vec_id", F.lit(mod)) == 0)
+        embeddings.where(F.col("vec_id").isin([int(q) for q in query_ids]))
         .select("vec_id", "embedding")
         .orderBy("vec_id")
         .toPandas()
     )
-    if len(pdf) < min_rows:
-        pdf = (
-            embeddings.select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .limit(fallback_rows)
-            .toPandas()
-        )
-    return np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+    return pdf["vec_id"].to_numpy(np.int64), _matrix(pdf["embedding"])
 
 
 def pq_encode(
@@ -119,10 +117,7 @@ def pq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            codes = _encode(X, cb)
+            codes = _encode(_matrix(pdf["embedding"]), cb)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(np.int64),
@@ -152,8 +147,7 @@ def pq_adc_topk(
     squared-L2 as DOUBLE (it stays float through the plan so the global
     window sorts on exactly what the partial top-k selected on; on the
     integer gate fixture every value is an exact integer — see module
-    determinism note — and the gate casts to bigint).  Ties
-    break by vec_id asc, pinned by the window sort.  Per-partition
+    determinism note — and the gate casts to bigint).  Per-partition
     output is bounded at |Q| * k rows; the encode and the scan are one
     fused map pass (the code index never materializes — callers that
     reuse an index should pq_encode once and join instead).
@@ -161,26 +155,8 @@ def pq_adc_topk(
     sample = _sample_rows(embeddings, fit_mod, ks, fit_sample_rows)
     codebooks = pq_fit(sample, m, ks)
 
-    qpdf = (
-        embeddings.where(F.col("vec_id").isin([int(q) for q in query_ids]))
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .toPandas()
-    )  # bounded: O(|query_ids|) driver rows
-    Q = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf["embedding"]])
-    qids = qpdf["vec_id"].to_numpy(np.int64)
-    mm, _, dsub = codebooks.shape
-    # LUT[q, s, j] = ||Q[q, s-th slice] - codebook[s, j]||^2
-    lut = np.stack(
-        [
-            (
-                (Q[:, None, s * dsub : (s + 1) * dsub] - codebooks[s][None, :, :])
-                ** 2
-            ).sum(axis=2)
-            for s in range(mm)
-        ],
-        axis=1,
-    )
+    qids, Q = _query_rows(embeddings, query_ids)
+    lut = np.stack([_subspace_lut(qv, codebooks) for qv in Q])  # (|Q|, m, ks)
     bc = spark.sparkContext.broadcast((codebooks, lut, qids))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -188,40 +164,60 @@ def pq_adc_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            codes = _encode(X, cb)  # (n, m)
-            vec_ids = pdf["vec_id"].to_numpy(np.int64)
+            codes = _encode(_matrix(pdf["embedding"]), cb)  # (n, m)
             # dist[q, n] = sum over s of LUT[q, s, codes[n, s]]
             dist = lut_[:, np.arange(codes.shape[1])[None, :], codes].sum(axis=2)
-            out = []
-            for qi in range(len(qids_)):
-                d = dist[qi]
-                take = min(k, len(d))
-                # partial top-k with the (dist, vec_id) tie rule
-                order = np.lexsort((vec_ids, d))[:take]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids_[qi],
-                            "vec_id": vec_ids[order],
-                            "adc_dist": d[order],
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
+            yield _adc_topk(qids_, pdf["vec_id"].to_numpy(np.int64), dist, k)
 
     partial = embeddings.select("vec_id", "embedding").mapInPandas(
         scan, schema="query_id long, vec_id long, adc_dist double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
+    return _adc_ranks(partial, k)
+
+
+def _adc_topk(
+    qids: np.ndarray, vec_ids: np.ndarray, dist: np.ndarray, k: int
+) -> pd.DataFrame:
+    """Partial top-k by ADC distance asc over a (query x row) distance
+    matrix; +inf marks a pair that was never scored."""
+    rows, cols = pinned_topk(-dist, vec_ids, k)
+    return pd.DataFrame(
+        {
+            "query_id": qids[rows],
+            "vec_id": vec_ids[cols],
+            "adc_dist": dist[rows, cols],
+        }
     )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.col("rank").cast("int"), "adc_dist")
+
+
+def _ivf_adc_topk(
+    probe_luts: dict[int, dict[int, np.ndarray]],
+    codes: np.ndarray,
+    clusters: np.ndarray,
+    vec_ids: np.ndarray,
+    k: int,
+    exclude_self: bool,
+) -> pd.DataFrame:
+    """Partial ADC top-k of one batch of residual-coded rows: each query
+    scores only the rows of the lists it probed, with that list's residual
+    LUT (``_residual_probe_luts``); ``exclude_self`` drops each query's own
+    vec_id."""
+    qids = np.fromiter(probe_luts, dtype=np.int64, count=len(probe_luts))
+    dist = np.full((qids.size, vec_ids.size), np.inf)
+    s_idx = np.arange(codes.shape[1])[None, :]
+    for qi, luts in enumerate(probe_luts.values()):
+        for c, lut in luts.items():
+            sel = np.flatnonzero(clusters == c)
+            dist[qi, sel] = lut[s_idx, codes[sel]].sum(axis=1)
+    if exclude_self:
+        dist[vec_ids[None, :] == qids[:, None]] = np.inf
+    return _adc_topk(qids, vec_ids, dist, k)
+
+
+def _adc_ranks(partial: DataFrame, k: int) -> DataFrame:
+    """``rank_top_k`` over ADC partials, ascending distance."""
+    return rank_top_k(partial, k, F.asc("adc_dist")).select(
+        "query_id", "vec_id", F.col("rank").cast("int"), "adc_dist"
     )
 
 
@@ -242,10 +238,6 @@ def _residual_probe_luts(
     """Per (query, probed list): ADC LUT over the query's RESIDUAL against
     that list's coarse centroid — the broadcast payload of both the fused
     and the prebuilt-index IVFPQ search paths."""
-    from omop_concept_automapper_spark.operators.similarity import (
-        _probe_lists,
-    )
-
     out: dict[int, dict[int, np.ndarray]] = {}
     for qid, vec in zip(qids, qvecs):
         qv = np.asarray(vec, dtype=np.float64)
@@ -254,6 +246,28 @@ def _residual_probe_luts(
             for c in _probe_lists(qv, coarse, n_probe)
         }
     return out
+
+
+def _ivfpq_fit(
+    spark: SparkSession,
+    embeddings: DataFrame,
+    mod: int,
+    n_centroids: int,
+    m: int,
+    ks: int,
+    fit_sample_rows: int,
+    pq_fit_rows: int | None = None,
+) -> tuple[np.ndarray, DataFrame, np.ndarray]:
+    """Coarse quantizer + list assignment (``_sampled_quantizer``) and PQ
+    codebooks fit on the sample's residuals: (coarse, assigned, codebooks).
+    ``pq_fit_rows`` caps the PQ fit at the sample's head (sorted by vec_id,
+    so still deterministic and layout-independent)."""
+    coarse, assigned = _sampled_quantizer(
+        spark, embeddings, mod, n_centroids, 42, fit_sample_rows
+    )
+    sample = _sample_rows(embeddings, mod, ks, fit_sample_rows)[:pq_fit_rows]
+    codebooks = pq_fit(sample - coarse[assign_euclidean(sample, coarse)], m, ks)
+    return coarse, assigned, codebooks
 
 
 def ivfpq_topk(
@@ -291,78 +305,31 @@ def ivfpq_topk(
     integers — VALUES-pinnable via :func:`sequential_ivfpq_topk`.
     Returns (query_id, vec_id, rank, adc_dist double).
     """
-    from omop_concept_automapper_spark.operators.similarity import (
-        _probe_lists,
-        _sampled_quantizer,
+    coarse, assigned, codebooks = _ivfpq_fit(
+        spark, embeddings, fit_mod, n_centroids, m, ks, fit_sample_rows
     )
 
-    coarse, assigned = _sampled_quantizer(
-        spark, embeddings, fit_mod, n_centroids, 42, fit_sample_rows
+    probe_luts = _residual_probe_luts(
+        *_query_rows(embeddings, query_ids), coarse, codebooks, n_probe
     )
-    sample = _sample_rows(embeddings, fit_mod, ks, fit_sample_rows)
-    sample_res = sample - coarse[assign_euclidean(sample, coarse)]
-    codebooks = pq_fit(sample_res, m, ks)
-
-    qpdf = (
-        embeddings.where(F.col("vec_id").isin([int(q) for q in query_ids]))
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .toPandas()
-    )
-    Q = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf["embedding"]])
-    qids = qpdf["vec_id"].to_numpy(np.int64)
-    probe_luts = _residual_probe_luts(qids, Q, coarse, codebooks, n_probe)
     bc = spark.sparkContext.broadcast((coarse, codebooks, probe_luts))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         coarse_, cb, pl = bc.value
-        s_idx = np.arange(cb.shape[0])[None, :]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
             clusters = pdf["cluster"].to_numpy(np.int64)
-            codes = _encode(X - coarse_[clusters], cb)
+            codes = _encode(_matrix(pdf["embedding"]) - coarse_[clusters], cb)
             vec_ids = pdf["vec_id"].to_numpy(np.int64)
-            out = []
-            for qid, luts in pl.items():
-                mask = np.isin(clusters, list(luts))
-                if not mask.any():
-                    continue
-                sub_codes, sub_ids = codes[mask], vec_ids[mask]
-                sub_cl = clusters[mask]
-                d = np.empty(len(sub_ids))
-                for c, lut in luts.items():
-                    cm = sub_cl == c
-                    if cm.any():
-                        d[cm] = lut[s_idx, sub_codes[cm]].sum(axis=1)
-                take = min(k, len(d))
-                order = np.lexsort((sub_ids, d))[:take]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "vec_id": sub_ids[order],
-                            "adc_dist": d[order],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            yield _ivf_adc_topk(
+                pl, codes, clusters, vec_ids, k, exclude_self=False
+            )
 
     partial = assigned.select("vec_id", "cluster", "embedding").mapInPandas(
         scan, schema="query_id long, vec_id long, adc_dist double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.col("rank").cast("int"), "adc_dist")
-    )
+    return _adc_ranks(partial, k)
 
 
 def ivfpq_build_index(
@@ -382,22 +349,10 @@ def ivfpq_build_index(
     once; returns (coarse_centroids, pq_codebooks) for query processes
     (same contract as similarity.ivf_build_index, which stores the raw
     vectors instead)."""
-    from omop_concept_automapper_spark.operators.similarity import (
-        _sampled_quantizer,
-    )
-
     n_rows = embeddings.count()
     mod = max(1, -(-n_rows // fit_sample_rows))
-    coarse, assigned = _sampled_quantizer(
-        spark, embeddings, mod, n_centroids, 42, fit_sample_rows
-    )
-    sample = _sample_rows(embeddings, mod, ks, fit_sample_rows)
-    if pq_fit_rows is not None:
-        # cap the Lloyd cost at large ks: the sample is sorted by vec_id,
-        # so the head slice stays deterministic and layout-independent
-        sample = sample[:pq_fit_rows]
-    codebooks = pq_fit(
-        sample - coarse[assign_euclidean(sample, coarse)], m, ks
+    coarse, assigned, codebooks = _ivfpq_fit(
+        spark, embeddings, mod, n_centroids, m, ks, fit_sample_rows, pq_fit_rows
     )
     bc = spark.sparkContext.broadcast((coarse, codebooks))
 
@@ -406,14 +361,13 @@ def ivfpq_build_index(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
             clusters = pdf["cluster"].to_numpy(np.int64)
             # smallint codes: ks <= 32768 always holds (256 is the
             # practical ceiling), and halving the element width is the
             # point of this table
-            codes = _encode(X - coarse_[clusters], cb).astype(np.int16)
+            codes = _encode(
+                _matrix(pdf["embedding"]) - coarse_[clusters], cb
+            ).astype(np.int16)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(np.int64),
@@ -444,7 +398,6 @@ def ivfpq_search(
     broadcasts the per-(query, list) residual LUTs and never touches a
     raw vector.  Excludes the query's own vec_id (ivf_search semantics).
     Returns (query_id, vec_id, rank, adc_dist double)."""
-    mm = codebooks.shape[0]
     probe_luts = _residual_probe_luts(
         queries["query_id"], queries["vector"], coarse, codebooks, n_probe
     )
@@ -452,7 +405,6 @@ def ivfpq_search(
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pl = bc.value
-        s_idx = np.arange(mm)[None, :]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -461,43 +413,14 @@ def ivfpq_search(
             )
             clusters = pdf["cluster"].to_numpy(np.int64)
             vec_ids = pdf["vec_id"].to_numpy(np.int64)
-            out = []
-            for qid, luts in pl.items():
-                mask = np.isin(clusters, list(luts)) & (vec_ids != qid)
-                if not mask.any():
-                    continue
-                sub_codes, sub_ids = codes[mask], vec_ids[mask]
-                sub_cl = clusters[mask]
-                d = np.empty(len(sub_ids))
-                for c, lut in luts.items():
-                    cm = sub_cl == c
-                    if cm.any():
-                        d[cm] = lut[s_idx, sub_codes[cm]].sum(axis=1)
-                take = min(k, len(d))
-                order = np.lexsort((sub_ids, d))[:take]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "vec_id": sub_ids[order],
-                            "adc_dist": d[order],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            yield _ivf_adc_topk(
+                pl, codes, clusters, vec_ids, k, exclude_self=True
+            )
 
     partial = index.select("vec_id", "cluster", "codes").mapInPandas(
         scan, schema="query_id long, vec_id long, adc_dist double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.col("rank").cast("int"), "adc_dist")
-    )
+    return _adc_ranks(partial, k)
 
 
 def ivfpq_search_rerank(
@@ -550,13 +473,8 @@ def ivfpq_search_rerank(
         lambda acc, x: acc + x,
     )
     scored = cand.select("query_id", "vec_id", l2.alias("l2_dist"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("l2_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.col("rank").cast("int"), "l2_dist")
+    return rank_top_k(scored, k, F.asc("l2_dist")).select(
+        "query_id", "vec_id", F.col("rank").cast("int"), "l2_dist"
     )
 
 

@@ -15,6 +15,11 @@
 * ``lsh_bucketed_topk`` — random-hyperplane bucketing (corpus-scaled plane
   count), then top-k WITHIN bucket: the full cross product replaced by a
   bucket-equijoin; bucket assignment runs in the Arrow matmul kernel.
+
+Every per-query top-k here and in ``pq.py`` ends in :func:`rank_top_k`,
+the one window merge; the operators that score in numpy first cut a
+partial top-k per batch with :func:`pinned_topk`.  The tie rule (-score,
+vec_id asc) lives in those two helpers and nowhere else.
 """
 
 from __future__ import annotations
@@ -23,11 +28,102 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from omop_concept_automapper_spark.operators.dedup import cosine_col
+
+
+def pinned_topk(
+    scores: np.ndarray, ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row top-k of an (n, m) score matrix in the pinned order
+    (-score, id asc), where ``ids`` holds the m column ids.
+
+    Returns (rows, cols), grouped by row and best first within a row: up
+    to ``k`` columns per row that score above -inf (NaN never qualifies).
+    Every tie at a row's k-th score survives ``np.partition`` and is cut by
+    id, so the result never depends on where the partition placed equal
+    values.  Because the order is total, the top-k of a union equals the
+    top-k of its parts' top-k lists: per-partition cuts merged by
+    :func:`rank_top_k` are exact under any partitioning.  Distance
+    operators pass ``-d`` (+inf for pairs that were never scored).
+    """
+    n, m = scores.shape
+    kk = min(k, m)
+    if n == 0 or kk <= 0:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty
+    if np.isnan(scores).any():  # np.partition would rank NaN above all
+        scores = np.where(np.isnan(scores), -np.inf, scores)
+    # the k-th score, clamped to the lowest finite value so -inf never passes
+    thr = np.full((n, 1), np.finfo(scores.dtype).min, dtype=scores.dtype)
+    if m > kk:
+        thr = np.maximum(thr, np.partition(scores, m - kk, axis=1)[:, m - kk, None])
+    rows, cols = np.divmod(np.flatnonzero(scores >= thr), m)
+    order = np.lexsort((ids[cols], -scores[rows, cols], rows))
+    rows, cols = rows[order], cols[order]
+    counts = np.bincount(rows, minlength=n)
+    rank = np.arange(rows.size) - np.repeat(np.cumsum(counts) - counts, counts)
+    return rows[rank < kk], cols[rank < kk]
+
+
+def rank_top_k(partials: DataFrame, k: int, score: Column) -> DataFrame:
+    """Merge per-query partial top-k lists: ``rank`` is the row_number over
+    ``query_id`` in (``score`` order, vec_id asc), and rows with
+    ``rank <= k`` are kept."""
+    w = Window.partitionBy("query_id").orderBy(score, F.asc("vec_id"))
+    return partials.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
+def _matrix(values) -> np.ndarray:
+    """A list column (one array per row) as a float64 (n, dim) matrix."""
+    return np.asarray([np.asarray(v, dtype=np.float64) for v in values])
+
+
+def _unit_rows(values) -> np.ndarray:
+    """``_matrix`` with every nonzero row scaled to unit L2 norm."""
+    mat = _matrix(values)
+    norm = np.linalg.norm(mat, axis=1, keepdims=True)
+    norm[norm == 0] = 1.0
+    return mat / norm
+
+
+def _cosine_partials(
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    pdf: pd.DataFrame,
+    k: int,
+    allowed: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """Partial top-k of one batch of index rows ``pdf`` (vec_id, embedding)
+    for the unit query rows ``qmat``; pairs outside the optional
+    (query x row) ``allowed`` mask are never selected."""
+    vec_ids = pdf["vec_id"].to_numpy(np.int64)
+    scores = qmat @ _unit_rows(pdf["embedding"]).T
+    if allowed is not None:
+        scores = np.where(allowed, scores, -np.inf)
+    rows, cols = pinned_topk(scores, vec_ids, k)
+    return pd.DataFrame(
+        {
+            "query_id": qids[rows],
+            "vec_id": vec_ids[cols],
+            "cosine": scores[rows, cols],
+        }
+    )
+
+
+def _cosine_bp_ranks(partials: DataFrame, k: int) -> DataFrame:
+    """``rank_top_k`` over cosine partials, projected to basis points."""
+    return rank_top_k(partials, k, F.desc("cosine")).select(
+        "query_id",
+        "vec_id",
+        "rank",
+        F.round(F.col("cosine") * 10000).cast("long").alias("cosine_bp"),
+    )
 
 
 def ann_topk(
@@ -59,61 +155,18 @@ def knn_join(
     distributed exact-kNN plan.
     """
     qids = queries["query_id"].to_numpy(np.int64)
-    qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in queries["vector"]])
-    qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qnorm[qnorm == 0] = 1.0
-    qmat = qmat / qnorm
-    bc = spark.sparkContext.broadcast((qids, qmat))
+    bc = spark.sparkContext.broadcast((qids, _unit_rows(queries["vector"])))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_ = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            emat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            enorm = np.linalg.norm(emat, axis=1, keepdims=True)
-            enorm[enorm == 0] = 1.0
-            emat = emat / enorm
-            scores = qmat_ @ emat.T  # (n_q, n_e)
-            vec_ids = pdf["vec_id"].to_numpy(np.int64)
-            out = []
-            for qi in range(scores.shape[0]):
-                row = scores[qi]
-                kk = min(k, row.size)
-                # partial top-k within this partition's batch, with the
-                # pinned (-score, vec_id asc) tie rule: boundary ties at the
-                # kth score must not depend on argpartition's arbitrary
-                # placement, or the global merge becomes partitioning-
-                # dependent and can disagree with the oracle's vec_id-asc
-                # tie-break.
-                if row.size > kk:
-                    kth = np.partition(row, row.size - kk)[row.size - kk]
-                    cand = np.flatnonzero(row >= kth)
-                else:
-                    cand = np.arange(row.size)
-                order = np.lexsort((vec_ids[cand], -row[cand]))
-                for j in cand[order[:kk]]:
-                    out.append((int(qids_[qi]), int(vec_ids[j]), float(row[j])))
-            yield pd.DataFrame(out, columns=["query_id", "vec_id", "cosine"])
+            if len(pdf):
+                yield _cosine_partials(qids_, qmat_, pdf, k)
 
     partials = embeddings.select("vec_id", "embedding").mapInPandas(
         score, schema="query_id long, vec_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "vec_id",
-            "rank",
-            F.round(F.col("cosine") * 10000).cast("long").alias("cosine_bp"),
-        )
-    )
+    return _cosine_bp_ranks(partials, k)
 
 
 def knn_join_shuffled(
@@ -135,8 +188,7 @@ def knn_join_shuffled(
     hashed into ``n_shards`` shards and replicated across the query slices.
     Each ``(qslice, shard)`` cogroup is scored with one numpy matmul and
     emits its per-query partial top-k; a final groupBy(query_id) merge
-    reduces partials.  Because the order (cosine DESC, vec_id ASC) is
-    TOTAL, per-shard top-k truncation is exact under the merge.
+    reduces the partials exactly (see ``pinned_topk``).
 
     Memory/shuffle accounting (the r3-verdict fix — the previous version
     grouped on ``shard`` alone, so every task materialized the FULL query
@@ -165,56 +217,17 @@ def knn_join_shuffled(
     )
 
     def score(qpdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "vec_id", "cosine"]
         if len(qpdf) == 0 or len(epdf) == 0:
-            return pd.DataFrame(columns=cols)
-        qmat = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in qpdf["q_embedding"]]
-        )
-        qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-        qn[qn == 0] = 1.0
-        qmat = qmat / qn
-        emat = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in epdf["embedding"]]
-        )
-        en = np.linalg.norm(emat, axis=1, keepdims=True)
-        en[en == 0] = 1.0
-        emat = emat / en
-        scores = qmat @ emat.T
-        vec_ids = epdf["vec_id"].to_numpy(np.int64)
+            return pd.DataFrame(columns=["query_id", "vec_id", "cosine"])
         qids = qpdf["query_id"].to_numpy(np.int64)
-        out = []
-        for qi in range(scores.shape[0]):
-            row = scores[qi]
-            kk = min(k, row.size)
-            # pinned (-score, vec_id asc) tie rule, same as knn_join: the
-            # total order makes the shard merge exact
-            if row.size > kk:
-                kth = np.partition(row, row.size - kk)[row.size - kk]
-                cand = np.flatnonzero(row >= kth)
-            else:
-                cand = np.arange(row.size)
-            order = np.lexsort((vec_ids[cand], -row[cand]))
-            for j in cand[order[:kk]]:
-                out.append((int(qids[qi]), int(vec_ids[j]), float(row[j])))
-        return pd.DataFrame(out, columns=cols)
+        return _cosine_partials(qids, _unit_rows(qpdf["q_embedding"]), epdf, k)
 
     partials = (
         q_rep.groupBy("qslice", "shard")
         .cogroup(e_sharded.groupBy("qslice", "shard"))
         .applyInPandas(score, schema="query_id long, vec_id long, cosine double")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "vec_id",
-            "rank",
-            F.round(F.col("cosine") * 10000).cast("long").alias("cosine_bp"),
-        )
-    )
+    return _cosine_bp_ranks(partials, k)
 
 
 def ivf_topk(
@@ -257,7 +270,7 @@ def ivf_topk(
     honest residual caveat.  With n_probe == n_centroids this degrades to
     EXACT brute force regardless of where the centroids landed (the
     ``ann_ivf_topk`` gate runs full-probe so its oracle is unaffected by
-    the quantizer fit).  Tie-break (cosine desc, vec_id asc).
+    the quantizer fit).
     """
     n_rows = embeddings.count()
     mod = max(1, -(-n_rows // fit_sample_rows))  # ceil: expected <= sample
@@ -265,37 +278,16 @@ def ivf_topk(
         spark, embeddings, mod, n_centroids, seed, fit_sample_rows
     )
 
-    q_rows = (
-        embeddings.where(F.col("vec_id").isin([int(i) for i in query_ids]))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    probe_pairs = []
-    for r in q_rows:
-        qv = np.asarray(r["embedding"], dtype=np.float64)
-        for c in _probe_lists(qv, cent, n_probe):
-            probe_pairs.append((int(r["vec_id"]), int(c)))
-    probes = spark.createDataFrame(probe_pairs, "query_id long, cluster int")
-    queries = spark.createDataFrame(
-        [(int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in q_rows],
-        "query_id long, q_embedding array<double>",
-    )
-
-    cand = (
-        probes.join(assigned, "cluster")
-        .join(F.broadcast(queries), "query_id")
-        .where(F.col("vec_id") != F.col("query_id"))
+    _, cand = _probed_candidates(
+        spark, embeddings, query_ids, cent, assigned, n_probe
     )
     cos = cosine_col(F.col("q_embedding"), F.col("embedding"))
     scored = cand.select(
         "query_id", "vec_id",
         F.round(cos * 10000).cast("long").alias("cosine_bp"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_bp"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "cosine_bp")
+    return rank_top_k(scored, k, F.desc("cosine_bp")).select(
+        "query_id", "vec_id", "rank", "cosine_bp"
     )
 
 
@@ -323,23 +315,10 @@ def _sampled_quantizer(
 
     Returns ``(centroids, assigned)`` with assigned = (vec_id, cluster,
     embedding)."""
-    sample_pdf = (
-        embeddings.where(F.pmod("vec_id", F.lit(mod)) == 0)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .toPandas()
+    cent = integer_kmeans(
+        _sample_rows(embeddings, mod, n_centroids, fallback_rows),
+        n_centroids, seed,
     )
-    if len(sample_pdf) < n_centroids:
-        sample_pdf = (
-            embeddings.select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .limit(fallback_rows)
-            .toPandas()
-        )
-    sample = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in sample_pdf["embedding"]]
-    )
-    cent = integer_kmeans(sample, n_centroids, seed)
     bc = spark.sparkContext.broadcast(cent)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -347,13 +326,12 @@ def _sampled_quantizer(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "cluster": assign_euclidean(X, c).astype(np.int32),
+                    "cluster": assign_euclidean(
+                        _matrix(pdf["embedding"]), c
+                    ).astype(np.int32),
                 }
             )
 
@@ -361,6 +339,62 @@ def _sampled_quantizer(
         assign, schema="vec_id long, cluster int"
     ).join(embeddings.select("vec_id", "embedding"), "vec_id")
     return cent, assigned
+
+
+def _probed_candidates(
+    spark: SparkSession,
+    embeddings: DataFrame,
+    query_ids: list[int],
+    cent: np.ndarray,
+    assigned: DataFrame,
+    n_probe: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The queries, drawn from ``embeddings`` by id, as (query_id,
+    q_embedding), and their candidates: every other row of the ``n_probe``
+    lists nearest each query (a cluster-id equijoin on ``assigned``)."""
+    q_rows = (
+        embeddings.where(F.col("vec_id").isin([int(i) for i in query_ids]))
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    probe_pairs = [
+        (int(r["vec_id"]), int(c))
+        for r in q_rows
+        for c in _probe_lists(np.asarray(r["embedding"], np.float64), cent, n_probe)
+    ]
+    probes = spark.createDataFrame(probe_pairs, "query_id long, cluster int")
+    queries = spark.createDataFrame(
+        [(int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in q_rows],
+        "query_id long, q_embedding array<double>",
+    )
+    cand = (
+        probes.join(assigned, "cluster")
+        .join(F.broadcast(queries), "query_id")
+        .where(F.col("vec_id") != F.col("query_id"))
+    )
+    return queries, cand
+
+
+def _sample_rows(
+    embeddings: DataFrame, mod: int, min_rows: int, fallback_rows: int
+) -> np.ndarray:
+    """Deterministic, layout-independent fit sample: the rows whose vec_id
+    is a multiple of ``mod``, or the first ``fallback_rows`` by vec_id when
+    that leaves fewer than ``min_rows``; sorted by vec_id."""
+    pdf = (
+        embeddings.where(F.pmod("vec_id", F.lit(mod)) == 0)
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .toPandas()
+    )
+    if len(pdf) < min_rows:
+        pdf = (
+            embeddings.select("vec_id", "embedding")
+            .orderBy("vec_id")
+            .limit(fallback_rows)
+            .toPandas()
+        )
+    return _matrix(pdf["embedding"])
 
 
 def _oracle_sample(
@@ -569,66 +603,28 @@ def ivf_search(
     shuffle of candidate embeddings (the join-based first cut shuffled
     every candidate row per probing query and lost to brute force outright
     at 2M vectors).  Plan shape: pruned scan -> mapInPandas -> top-k
-    window merge on O(tasks x queries x k) partials.  Tie rule (cosine
-    desc, vec_id asc) matches every other kNN path in this module.
+    window merge on O(tasks x queries x k) partials.
     """
     qids = queries["query_id"].to_numpy(np.int64)
-    qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in queries["vector"]])
-    qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qnorm[qnorm == 0] = 1.0
-    qmat = qmat / qnorm
-    n_cent = len(cent)
-    mask = np.zeros((len(qids), n_cent), dtype=bool)
-    for i in range(len(qids)):
-        qv = np.asarray(queries["vector"].iloc[i], dtype=np.float64)
+    mask = np.zeros((len(qids), len(cent)), dtype=bool)
+    for i, qv in enumerate(_matrix(queries["vector"])):
         mask[i, _probe_lists(qv, cent, n_probe)] = True
-    bc = spark.sparkContext.broadcast((qids, qmat, mask))
+    bc = spark.sparkContext.broadcast((qids, _unit_rows(queries["vector"]), mask))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_, mask_ = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            emat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            enorm = np.linalg.norm(emat, axis=1, keepdims=True)
-            enorm[enorm == 0] = 1.0
-            emat = emat / enorm
             vec_ids = pdf["vec_id"].to_numpy(np.int64)
-            clusters = pdf["cluster"].to_numpy(np.int64)
-            scores = qmat_ @ emat.T  # (n_q, n_batch)
-            allowed = mask_[:, clusters]  # (n_q, n_batch)
+            allowed = mask_[:, pdf["cluster"].to_numpy(np.int64)]
             allowed &= vec_ids[None, :] != qids_[:, None]  # self-exclusion
-            scores = np.where(allowed, scores, -np.inf)
-            out = []
-            for qi in range(scores.shape[0]):
-                row = scores[qi]
-                cand = np.flatnonzero(row > -np.inf)
-                if cand.size == 0:
-                    continue
-                # pinned tie rule (-score, vec_id asc), same partial-top-k
-                # boundary handling as knn_join
-                kk = min(k, cand.size)
-                order = np.lexsort((vec_ids[cand], -row[cand]))
-                for j in cand[order[:kk]]:
-                    out.append((int(qids_[qi]), int(vec_ids[j]), float(row[j])))
-            yield pd.DataFrame(out, columns=["query_id", "vec_id", "cosine"])
+            yield _cosine_partials(qids_, qmat_, pdf, k, allowed)
 
     partials = index.select("vec_id", "embedding", "cluster").mapInPandas(
         score, schema="query_id long, vec_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "vec_id",
-            "rank",
-            F.round(F.col("cosine") * 10000).cast("long").alias("cosine_bp"),
-        )
-    )
+    return _cosine_bp_ranks(partials, k)
 
 
 def ivf_recall_report(
@@ -652,7 +648,7 @@ def ivf_recall_report(
     * assignment: map-only distributed pass against broadcast centroids
       (integer-exact, so partitioning cannot flip an assignment);
     * query probes the ``n_probe`` nearest lists (cluster-id equijoin);
-    * neighbor metric: squared euclidean, ties (dist2, vec_id) asc;
+    * neighbor metric: squared euclidean;
     * output: (query_id, recall_bp) with recall = |ivf ∩ exact| / k.
 
     With integer-valued fixture vectors every comparison is exact, so the
@@ -662,43 +658,25 @@ def ivf_recall_report(
     cent, assigned = _sampled_quantizer(
         spark, embeddings, sample_mod, n_centroids, seed, fallback_rows
     )
-
-    q_rows = (
-        embeddings.where(F.col("vec_id").isin([int(i) for i in query_ids]))
-        .select("vec_id", "embedding")
-        .collect()
+    queries, cand = _probed_candidates(
+        spark, embeddings, query_ids, cent, assigned, n_probe
     )
-    probe_pairs, q_data = [], []
-    for r in q_rows:
-        qv = np.asarray(r["embedding"], dtype=np.float64)
-        for c in _probe_lists(qv, cent, n_probe):
-            probe_pairs.append((int(r["vec_id"]), int(c)))
-        q_data.append((int(r["vec_id"]), [float(x) for x in r["embedding"]]))
-    probes = spark.createDataFrame(probe_pairs, "query_id long, cluster int")
-    queries = spark.createDataFrame(q_data, "query_id long, q_embedding array<double>")
 
     d2 = F.aggregate(
         F.zip_with("q_embedding", "embedding", lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("vec_id"))
-
-    ivf_topk_df = (
-        probes.join(assigned, "cluster")
-        .join(F.broadcast(queries), "query_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", d2.alias("d2"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    ivf_topk_df = rank_top_k(
+        cand.select("query_id", "vec_id", d2.alias("d2")), k, F.asc("d2")
     )
-    exact_topk_df = (
+    exact_topk_df = rank_top_k(
         embeddings.select("vec_id", "embedding")
         .join(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", d2.alias("d2"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", d2.alias("d2")),
+        k,
+        F.asc("d2"),
     )
     hits = ivf_topk_df.select("query_id", "vec_id").join(
         exact_topk_df.select("query_id", "vec_id"), ["query_id", "vec_id"]
@@ -818,9 +796,7 @@ def hyperplane_buckets_arrow(embeddings: DataFrame, planes: np.ndarray) -> DataF
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+            X = _matrix(pdf["embedding"])
             bits = (X @ P.T) >= 0
             yield pd.DataFrame(
                 {
@@ -835,17 +811,6 @@ def hyperplane_buckets_arrow(embeddings: DataFrame, planes: np.ndarray) -> DataF
     return embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     ).mapInPandas(run, schema="vec_id long, embedding array<double>, bkt string")
-
-
-def sign_bucket(col, n_planes: int = 4):
-    """Deprecated coarse bucket (signs of the FIRST n dims): kept only for
-    comparison; fixed 2^n buckets degrade to O(n^2/2^n) at scale.  Use
-    ``hyperplane_bucket`` + ``planes_for_corpus``."""
-    parts = [
-        F.when(F.element_at(col, i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(n_planes)
-    ]
-    return F.concat(*parts)
 
 
 def lsh_bucketed_topk(
@@ -883,9 +848,6 @@ def lsh_bucketed_topk(
         F.col("r.vec_id").alias("vec_id"),
         F.round(cos * 10000).cast("long").alias("cosine_bp"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_bp"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "cosine_bp")
+    return rank_top_k(scored, k, F.desc("cosine_bp")).select(
+        "query_id", "vec_id", "rank", "cosine_bp"
     )

@@ -18,7 +18,7 @@ from __future__ import annotations
 import numpy as np
 
 from omop_concept_automapper_spark.functions.embedder import embed_texts
-from omop_concept_automapper_spark.operators.knn import _topk_masked
+from omop_concept_automapper_spark.operators.similarity import pinned_topk
 
 
 def _filter_mask(index: dict, filters: dict) -> np.ndarray:
@@ -69,7 +69,7 @@ def search_similar_concepts(
     qvec = embed_texts([query])[0]
     scores = index["matrix"] @ qvec
     scores = np.where(mask, scores, -np.inf)
-    top = _topk_masked(scores, index["concept_id"], k)
+    _, top = pinned_topk(scores[None, :], index["concept_id"], k)
     out = []
     for j in top:
         row = {

@@ -86,6 +86,29 @@ def test_queries_dict_literals_repeat_no_key():
             assert not repeated, f"line {node.lineno}: repeated keys {repeated}"
 
 
+def test_vector_operators_share_one_top_k_and_one_rank_merge():
+    """In similarity.py and pq.py, ``np.lexsort`` and ``row_number`` are
+    called only by the shared helpers ``pinned_topk``/``rank_top_k``, the
+    IVF probe order ``_probe_lists`` and the sequential reference twins the
+    oracles use; anywhere else they would be a hand-rolled copy of the
+    pinned tie rule."""
+    allowed = {"pinned_topk", "rank_top_k", "_probe_lists"}
+    ops = Path(entry_mod.__file__).parent / "omop_concept_automapper_spark/operators"
+    for mod in ("similarity.py", "pq.py"):
+        for node in ast.parse((ops / mod).read_text()).body:
+            name = getattr(node, "name", "")
+            if name in allowed or name.lstrip("_").startswith("sequential_"):
+                continue
+            for call in ast.walk(node):
+                if not isinstance(call, ast.Call):
+                    continue
+                f = call.func
+                callee = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                assert callee not in ("lexsort", "row_number"), (
+                    f"{mod}:{call.lineno}: {name or 'module level'} calls {callee}"
+                )
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -411,3 +411,23 @@ def test_winsorize_null_passthrough_and_validation(spark):
         winsorize(df, "v", 0, 9000)
     with pytest.raises(ValueError):
         winsorize(df, "v", 9000, 100)
+
+
+def test_winsorize_clips_null_group_to_its_own_bounds(spark):
+    from omop_concept_automapper_spark.operators.freq import winsorize
+
+    # every fourth row has a NULL group; the NULL group gets its own
+    # bounds from the groupBy, so its rows must come out clipped, not lost
+    rows = [(i, None if i % 4 == 0 else f"g{i % 2}", (i * 37) % 101)
+            for i in range(40)]
+    rows[0] = (0, None, 10**6)  # an outlier only the NULL group's hi clips
+    df = spark.createDataFrame(rows, "id long, grp string, v long")
+    out = winsorize(df, "v", 1000, 9000, group_cols=["grp"]).collect()
+    assert sorted(r["id"] for r in out) == list(range(40))
+
+    null_vals = sorted(v for _, g, v in rows if g is None)
+    lo, hi = null_vals[0], null_vals[8]  # 10th / 90th pct of 10 values
+    for r in out:
+        if r["grp"] is None:
+            assert r["v_wins"] == min(max(r["v"], lo), hi)
+    assert {r["id"]: r["_clipped"] for r in out}[0] == 1

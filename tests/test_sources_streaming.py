@@ -1,5 +1,5 @@
-"""Tests for source operators (S1/S2/S3/S6/S7), streaming ingestion (ST1
-streaming variant), and multimodal plumbing."""
+"""Tests for source operators (S1/S2/S3/S6/S7) and streaming ingestion (ST1
+streaming variant)."""
 
 from __future__ import annotations
 
@@ -13,11 +13,6 @@ from omop_concept_automapper_spark.fixtures.transcripts import (
     transcripts_dataframe,
 )
 from omop_concept_automapper_spark.fixtures.vocabulary import vocab_dataframes
-from omop_concept_automapper_spark.operators.multimodal import (
-    attach_media_column,
-    decode_stub,
-    extract_media_features,
-)
 from omop_concept_automapper_spark.sources.imports import (
     delete_vocabulary,
     export_mapped_csv,
@@ -138,60 +133,6 @@ def test_streaming_available_now_ingest(spark, tmp_path):
     ingest_available_now(spark, landing, target, ckpt)
     n2 = spark.read.parquet(target).count()
     assert n2 > n1
-
-
-def test_multimodal_plumbing(spark, tmp_path):
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, "spark multimodal bytes")],
-        "doc_id long, text string",
-    )
-    media = attach_media_column(docs)
-    feats = extract_media_features(media, fake=True)
-    rows = {r["media_id"]: r for r in feats.collect()}
-    assert rows[1]["n_bytes"] == len(b"hello world")
-    assert 64 <= rows[1]["width"] < 1024
-    import hashlib
-
-    assert rows[2]["sha256"] == hashlib.sha256(b"spark multimodal bytes").hexdigest()
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"x", fake=False)
-
-
-def test_multimodal_resize_and_frame_sample(spark):
-    from omop_concept_automapper_spark.operators.multimodal import (
-        resize_media,
-        sample_frames,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "x" * 100), (2, "a short one")], "doc_id long, text string"
-    )
-    media = attach_media_column(docs)
-
-    resized = {r["media_id"]: r for r in resize_media(media, max_dim=128).collect()}
-    for r in resized.values():
-        # aspect-preserving clamp: the long side is <= 128, ratio preserved
-        assert max(r["resized_width"], r["resized_height"]) <= 128
-        assert r["resized_width"] <= r["width"]
-        assert r["resized_height"] <= r["height"]
-        long_in = max(r["width"], r["height"])
-        if long_in > 128:
-            assert max(r["resized_width"], r["resized_height"]) == int(
-                long_in * min(1.0, 128 / long_in)
-            )
-
-    frames = sample_frames(media, every_ms=40, chunk_bytes=32).collect()
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r)
-    # 100 bytes / 32 -> 4 frames; reassembled bytes == original payload
-    assert len(by_media[1]) == 4
-    ordered = sorted(by_media[1], key=lambda r: r["frame_idx"])
-    assert b"".join(bytes(r["frame_bytes"]) for r in ordered) == b"x" * 100
-    assert [r["pts_ms"] for r in ordered] == [0, 40, 80, 120]
-    assert len(by_media[2]) == 1
-    with pytest.raises(NotImplementedError):
-        sample_frames(media, fake=False)
 
 
 def test_stream_into_kg_equals_from_scratch(spark, tmp_path):
