@@ -3523,7 +3523,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(CASE WHEN t.n < b.lo THEN -1
                              WHEN t.n > b.hi THEN 1
                              ELSE 0 END AS INTEGER) AS _clipped
-            FROM toks t JOIN b ON t.grp IS NOT DISTINCT FROM b.grp""",
+            FROM toks t LEFT JOIN b ON t.grp IS NOT DISTINCT FROM b.grp""",
         "text_tfidf_top_terms": f"""
             WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term
                          FROM documents WHERE text IS NOT NULL),

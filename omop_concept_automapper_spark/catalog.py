@@ -17,6 +17,16 @@ module provides the same *semantics* on plain parquet:
 * **per-snapshot lineage** — each manifest records operation, row counts and
   arbitrary stage metrics (north_rule: "per-partition lineage + metrics").
 
+Reads and commits run no Spark job that only reads metadata.  The manifest
+records the table's read schema, so :meth:`Table.read` hands it to
+``spark.read.schema`` instead of letting Spark run a footer-inference job;
+a manifest without one (written before the schema was recorded, or a
+``partition_by`` write, whose schema comes from partition discovery) still
+reads by inference.  A commit's row counts and per-partition lineage come
+from the ``num_rows`` of the parquet footers it just wrote, read on the
+driver with pyarrow.  Both are local-filesystem reads, like the
+``os.replace`` pointer flip.
+
 On a real cluster the same class works unchanged over HDFS/S3A paths for
 everything except the atomic pointer flip, which Iceberg's catalog would
 provide; swapping this layer for ``df.writeTo(...)`` is a one-file change —
@@ -34,6 +44,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _CURRENT = "_current"
 _MANIFESTS = "_manifests"
@@ -65,6 +76,28 @@ def _atomic_write_text(path: str, text: str) -> None:
     os.replace(tmp, path)
 
 
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable — the
+    schema a parquet read gives back for a frame of schema ``t``."""
+    if isinstance(t, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in t.fields
+            ]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def _read_schema(df: DataFrame) -> dict:
+    """The manifest's record of the schema a read of ``df``'s files gives."""
+    return _as_nullable(df.schema).jsonValue()
+
+
 @dataclass
 class Snapshot:
     snapshot_id: str
@@ -75,6 +108,9 @@ class Snapshot:
     # bucketed tables: bucket id (str) -> live data dirs for that bucket.
     # live_dirs stays the flattened union so old readers keep working.
     buckets: dict | None = None
+    # read schema (StructType JSON) handed to spark.read.schema; None reads
+    # by inference (older manifests, partition_by writes)
+    schema: dict | None = None
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
@@ -177,7 +213,12 @@ class Table:
         snap = self.snapshot(snapshot_id)
         if snap is None or not snap.live_dirs:
             raise FileNotFoundError(f"table {self.path} has no current snapshot")
-        return self.spark.read.parquet(*snap.live_dirs)
+        return self._read_dirs(snap.live_dirs, snap.schema)
+
+    def _read_dirs(self, dirs: list[str], schema: dict | None) -> DataFrame:
+        if schema is None:
+            return self.spark.read.parquet(*dirs)
+        return self.spark.read.schema(StructType.fromJson(schema)).parquet(*dirs)
 
     # ------------------------------------------------------------- write
     def _write_data_dir(self, df: DataFrame, partition_by: list[str] | None) -> str:
@@ -203,6 +244,8 @@ class Table:
         live_dirs: list[str],
         rows_written: int,
         metrics: dict | None,
+        schema: dict | None = None,
+        buckets: dict | None = None,
     ) -> Snapshot:
         snap = Snapshot(
             snapshot_id=sid,
@@ -210,6 +253,8 @@ class Table:
             live_dirs=live_dirs,
             rows_written=rows_written,
             metrics=metrics or {},
+            buckets=buckets,
+            schema=schema,
         )
         _atomic_write_text(
             os.path.join(self.path, _MANIFESTS, f"{sid}.json"), snap.to_json()
@@ -219,9 +264,14 @@ class Table:
 
     def _partition_lineage(self, data_dir: str, cap: int = 256) -> tuple[int, dict]:
         """(total_rows, per-partition lineage) for the snapshot manifest —
-        the north-rule 'per-partition lineage + metrics'.  One metadata-ish
-        job per commit.  Lineage is keyed by the partition-relative
-        directory (e.g. ``mapping_method=auto_drug``; ``""`` for an
+        the north-rule 'per-partition lineage + metrics'.  Counts come from
+        the ``num_rows`` of each parquet footer under ``data_dir``, read on
+        the driver: no Spark job.  Names Spark's file index skips (``_`` or
+        ``.`` prefixed, except ``_``-prefixed partition dirs such as
+        ``__bucket=3``) are skipped, and files with 0 rows are left out, so
+        ``n_files`` counts the files that hold rows.  Lineage is keyed by
+        the partition-relative directory exactly as it is on disk (e.g.
+        ``mapping_method=auto_drug``, ``g=x%25y``; ``""`` for an
         unpartitioned table) rather than by file basename: partition values
         are data-derived and deterministic, file names are not — which also
         makes the lineage oracle-checkable (gate ``s8_lineage_partitions``)
@@ -229,34 +279,28 @@ class Table:
         Truncated to ``cap`` entries, with an explicit ``truncated`` flag so
         readers can tell ``sum(rows_per_partition) != rows_written`` apart
         from corruption."""
-        from urllib.parse import unquote
+        import pyarrow.parquet as pq
 
-        from pyspark.sql import functions as F
+        def hidden(name: str) -> bool:
+            return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
-        with _job_description(
-            self.spark.sparkContext, f"lineage {os.path.basename(self.path)}"
-        ):
-            rows = (
-                self.spark.read.parquet(data_dir)
-                .groupBy(F.input_file_name().alias("file"))
-                .count()
-                .collect()
-            )
-        total = sum(int(r["count"]) for r in rows)
-        norm_dir = os.path.abspath(data_dir)
+        n_files = 0
         per_part: dict[str, int] = {}
-        for r in rows:
-            f = r["file"]
-            if f.startswith("file:"):
-                f = f[len("file:"):]
-            rel = os.path.relpath(os.path.dirname(os.path.abspath(f)), norm_dir)
-            # input_file_name returns URI-percent-encoded paths; unquote so
-            # the lineage key is the partition VALUE ('k=a b', not 'k=a%20b')
-            key = "" if rel == "." else unquote(rel)
-            per_part[key] = per_part.get(key, 0) + int(r["count"])
+        for root, dirs, files in os.walk(data_dir):
+            dirs[:] = [d for d in dirs if not hidden(d)]
+            rel = os.path.relpath(root, data_dir)
+            key = "" if rel == "." else rel
+            for name in files:
+                if hidden(name):
+                    continue
+                n = pq.read_metadata(os.path.join(root, name)).num_rows
+                if n:
+                    n_files += 1
+                    per_part[key] = per_part.get(key, 0) + n
+        total = sum(per_part.values())
         lineage = dict(sorted(per_part.items())[:cap])
         return total, {
-            "n_files": len(rows),
+            "n_files": n_files,
             "n_partitions": len(per_part),
             "rows_per_partition": lineage,
             "truncated": len(per_part) > cap,
@@ -273,8 +317,15 @@ class Table:
         prev = self.snapshot()
         live = (prev.live_dirs if prev else []) + [data_dir]
         total, lineage = self._partition_lineage(data_dir)
+        # inference over several live dirs reads the oldest file's footer,
+        # so an append keeps the schema of the snapshot it extends
+        if prev is not None:
+            schema = prev.schema
+        else:
+            schema = None if partition_by else _read_schema(df)
         return self._commit(
-            sid, "append", live, total, {**(metrics or {}), "lineage": lineage}
+            sid, "append", live, total, {**(metrics or {}), "lineage": lineage},
+            schema,
         )
 
     def overwrite(
@@ -283,15 +334,7 @@ class Table:
         partition_by: list[str] | None = None,
         metrics: dict | None = None,
     ) -> Snapshot:
-        if self.bucket_spec() is not None:
-            return self._commit_rewrite(df, "overwrite", partition_by, metrics)
-        sid = self._write_data_dir(df, partition_by)
-        data_dir = os.path.join(self.path, _DATA, sid)
-        total, lineage = self._partition_lineage(data_dir)
-        return self._commit(
-            sid, "overwrite", [data_dir], total,
-            {**(metrics or {}), "lineage": lineage},
-        )
+        return self._commit_rewrite(df, "overwrite", partition_by, metrics)
 
     # ---------------------------------------------------------- bucketing
     _BUCKETSPEC = "_bucketspec.json"
@@ -434,7 +477,7 @@ class Table:
             d for b in affected for d in prev_buckets.get(str(b), [])
         ]
         if touched_dirs:
-            current_touched = self.spark.read.parquet(*touched_dirs)
+            current_touched = self._read_dirs(touched_dirs, prev.schema)
             kept = current_touched.join(
                 delta.select(*keys).distinct(), on=keys, how="left_anti"
             )
@@ -448,24 +491,17 @@ class Table:
         live = [d for dirs in new_buckets.values() for d in dirs]
         data_dir = os.path.join(self.path, _DATA, sid)
         total, lineage = self._partition_lineage(data_dir)
-        snap = Snapshot(
-            snapshot_id=sid,
-            operation="merge",
-            live_dirs=live,
-            rows_written=total,
-            metrics={
+        return self._commit(
+            sid, "merge", live, total,
+            {
                 **(metrics or {}),
                 "lineage": lineage,
                 "buckets_rewritten": len(affected),
                 "buckets_total": spec["n_buckets"],
             },
-            buckets=new_buckets,
+            _read_schema(merged),
+            new_buckets,
         )
-        _atomic_write_text(
-            os.path.join(self.path, _MANIFESTS, f"{sid}.json"), snap.to_json()
-        )
-        _atomic_write_text(os.path.join(self.path, _CURRENT), sid)
-        return snap
 
     def delete_where(self, condition, metrics: dict | None = None) -> Snapshot:
         """Row-level delete (reference imports.py:441-452)."""
@@ -485,26 +521,20 @@ class Table:
             sid, written = self._write_bucketed_dir(df, spec)
             data_dir = os.path.join(self.path, _DATA, sid)
             total, lineage = self._partition_lineage(data_dir)
-            snap = Snapshot(
-                snapshot_id=sid,
-                operation=operation,
-                live_dirs=[d for dirs in written.values() for d in dirs],
-                rows_written=total,
-                metrics={**(metrics or {}), "lineage": lineage},
-                buckets=written,
+            return self._commit(
+                sid, operation,
+                [d for dirs in written.values() for d in dirs], total,
+                {**(metrics or {}), "lineage": lineage},
+                _read_schema(df),
+                written,
             )
-            _atomic_write_text(
-                os.path.join(self.path, _MANIFESTS, f"{sid}.json"),
-                snap.to_json(),
-            )
-            _atomic_write_text(os.path.join(self.path, _CURRENT), sid)
-            return snap
         sid = self._write_data_dir(df, partition_by)
         data_dir = os.path.join(self.path, _DATA, sid)
         total, lineage = self._partition_lineage(data_dir)
         return self._commit(
             sid, operation, [data_dir], total,
             {**(metrics or {}), "lineage": lineage},
+            None if partition_by else _read_schema(df),
         )
 
     # -------------------------------------------------------- maintenance

@@ -362,9 +362,11 @@ def winsorize(
     )
     if group_cols:
         # null-safe, like the groupBy that made the bounds: a NULL group is
-        # clipped to its own bounds instead of being dropped
+        # clipped to its own bounds instead of being dropped.  Left join: a
+        # group whose values are all NULL has no bounds row, and its rows
+        # pass through unclipped like every other NULL value
         cond = [df[c].eqNullSafe(bounds[f"_b_{c}"]) for c in group_cols]
-        joined = df.join(F.broadcast(bounds), cond)
+        joined = df.join(F.broadcast(bounds), cond, "left")
     else:
         joined = df.crossJoin(F.broadcast(bounds))
     v = F.col(value_col)

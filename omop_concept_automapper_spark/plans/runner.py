@@ -235,10 +235,9 @@ class Pipeline:
                 "mention_id", "mention_id2"
             )
             todo = mentions.join(done, ["mention_id", "mention_id2"], "left_anti")
-            if (
-                already.where(F.col("error").isNotNull()).isEmpty()
-                and todo.isEmpty()
-            ):
+            # one probe, reused by the commit below
+            clean = already.where(F.col("error").isNotNull()).isEmpty()
+            if clean and todo.isEmpty():
                 # resume no-op: every mention is already cleanly linked
                 # under this exact config/vocab fingerprint — the prior
                 # snapshot IS the answer.  Skip the link job and the
@@ -286,7 +285,7 @@ class Pipeline:
         ).hint("rebalance")
         if already is None:
             snap = tbl.overwrite(results, metrics={"link_config": fp})
-        elif already.where(F.col("error").isNotNull()).isEmpty():
+        elif clean:
             # clean partial commit: pure extension, O(remaining) write
             snap = tbl.append(results, metrics={"link_config": fp})
         else:

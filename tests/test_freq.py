@@ -431,3 +431,23 @@ def test_winsorize_clips_null_group_to_its_own_bounds(spark):
         if r["grp"] is None:
             assert r["v_wins"] == min(max(r["v"], lo), hi)
     assert {r["id"]: r["_clipped"] for r in out}[0] == 1
+
+
+def test_winsorize_keeps_all_null_group_rows_unclipped(spark):
+    from omop_concept_automapper_spark.operators.freq import winsorize
+
+    # group b has only NULL values, so exact_quantiles gives it no bounds
+    # row; its rows must still pass through, unclipped like any NULL value
+    df = spark.createDataFrame(
+        [("a", 1), ("a", 5), ("b", None), ("b", None)], "g string, v long"
+    )
+    out = sorted(
+        (r["g"], r["v"], r["v_wins"], r["_clipped"])
+        for r in winsorize(df, "v", 100, 9900, ["g"]).collect()
+    )
+    assert out == [
+        ("a", 1, 1, 0),
+        ("a", 5, 5, 0),
+        ("b", None, None, 0),
+        ("b", None, None, 0),
+    ]
