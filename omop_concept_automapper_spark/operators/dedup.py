@@ -516,13 +516,8 @@ def duplicate_ngram_spans(
     Documents shorter than ``n`` tokens participate as one whole-text
     gram (ngram_windows fallback) with span width = token count.
     """
-    from pyspark.sql.window import Window
-
     if n < 1 or min_count < 2:
         raise ValueError("need n >= 1 and min_count >= 2")
-    base = docs.where(F.col(text_col).isNotNull()).select(
-        id_col, tokens_col(text_col).alias("_toks")
-    )
     # r7: the gram COUNT and the dup semi-join only need gram EQUALITY,
     # never the gram text — key them on the 128-bit (xxhash64, seeded
     # xxhash64) pair instead of the ~n-word string, so the groupBy and the
@@ -530,16 +525,10 @@ def duplicate_ngram_spans(
     # shuffle keys, not payloads).  Same two-column collision discipline
     # as the mention keys (plans/mentions.py): a single 64-bit key would
     # see birthday collisions at 10^10 grams and silently merge counts.
-    g = base.select(
-        id_col,
-        F.size("_toks").alias("_len"),
-        F.posexplode(ngram_windows(F.col("_toks"), n)).alias(
-            "_pos0", "_gram"
-        ),
-    ).select(
+    g = gram_positions(docs, n, id_col, text_col).select(
         id_col,
         "_len",
-        (F.col("_pos0") + 1).alias("_pos"),
+        "_pos",
         F.xxhash64("_gram").alias("_gh1"),
         F.xxhash64(F.lit(1), F.col("_gram")).alias("_gh2"),
     )
@@ -554,6 +543,32 @@ def duplicate_ngram_spans(
         dup = g.groupBy("_gh1", "_gh2").agg(F.count(F.lit(1)).alias("_c"))
     dup = dup.where(F.col("_c") >= min_count).select("_gh1", "_gh2")
     marked = g.join(dup, ["_gh1", "_gh2"], "left_semi")
+    return island_spans(marked, n, id_col)
+
+
+def gram_positions(
+    docs: DataFrame, n: int, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(id, _len, _pos, _gram): every word ``n``-gram of each non-NULL
+    text with its 1-based token position and the text's token count."""
+    base = docs.where(F.col(text_col).isNotNull()).select(
+        id_col, tokens_col(text_col).alias("_toks")
+    )
+    return base.select(
+        id_col,
+        F.size("_toks").alias("_len"),
+        F.posexplode(ngram_windows(F.col("_toks"), n)).alias(
+            "_pos0", "_gram"
+        ),
+    ).select(id_col, "_len", (F.col("_pos0") + 1).alias("_pos"), "_gram")
+
+
+def island_spans(marked: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
+    """Merge marked gram positions (id, _pos, _len) into maximal spans
+    (id, span_from, span_to, n_dup_grams): a position more than one gram
+    width past its predecessor starts a new island."""
+    from pyspark.sql.window import Window
+
     width = F.least(F.lit(n), F.col("_len"))
     w = Window.partitionBy(id_col).orderBy("_pos")
     flagged = marked.select(

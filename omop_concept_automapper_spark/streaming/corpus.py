@@ -46,11 +46,9 @@ Per-batch fold (all O(batch + delta), never O(corpus)):
    as ``doc_id == cluster_id`` — min-label semantics make demotion
    automatic.
 
-Exactly-once: the CLUSTERS marker commits last and is the fold's applied
-signal; bands/docs appends carry their own markers, so a crash between
-commits replays into appends that skip and a relabel recomputed from the
-unchanged prior state — byte-identical.  Replaying all batches through a
-fresh checkpoint is a no-op (pinned by tests/test_streaming_corpus.py).
+The clusters table commits last and carries the applied signal (protocol:
+streaming/fold.py).  Replaying all batches through a fresh checkpoint is
+a no-op (pinned by tests/test_streaming_corpus.py).
 
 Seal (:func:`seal_corpus` / :func:`stream_assemble_corpus`): join the
 docs table to the settled keepers and run the SAME ``schedule_and_pack``
@@ -82,10 +80,12 @@ from omop_concept_automapper_spark.plans.corpus import (
     quality_survivors,
     schedule_and_pack,
 )
-from omop_concept_automapper_spark.streaming.packing import (
-    DOCS_STREAM_SCHEMA,
-    _bound_manifests,
+from omop_concept_automapper_spark.streaming.fold import (
+    append_once,
+    drain,
+    marker,
 )
+from omop_concept_automapper_spark.streaming.packing import DOCS_STREAM_SCHEMA
 
 
 def _corpus_tables(wh: Warehouse, prefix: str) -> tuple[Table, Table, Table]:
@@ -122,26 +122,18 @@ def _fold_clusters_batch(
         rows_per_band=rows_per_band,
     ).localCheckpoint(eager=True)
 
-    if not (
-        bands_tbl.exists()
-        and int(batch_id) in bands_tbl.applied_stream_batch_ids()
-    ):
-        bands_tbl.append(bands, metrics={"stream_batch_id": int(batch_id)})
-        _bound_manifests(bands_tbl, keep_manifests)
-    if not (
-        docs_tbl.exists()
-        and int(batch_id) in docs_tbl.applied_stream_batch_ids()
-    ):
-        docs_tbl.append(
-            batch_q.select(
-                "doc_id",
-                "source",
-                "ts",
-                token_count("text").cast("long").alias("n_tokens"),
-            ),
-            metrics={"stream_batch_id": int(batch_id)},
-        )
-        _bound_manifests(docs_tbl, keep_manifests)
+    append_once(bands_tbl, bands, batch_id, keep_manifests)
+    append_once(
+        docs_tbl,
+        batch_q.select(
+            "doc_id",
+            "source",
+            "ts",
+            token_count("text").cast("long").alias("n_tokens"),
+        ),
+        batch_id,
+        keep_manifests,
+    )
 
     # delta candidate edges: batch buckets vs stored history (which now
     # includes this batch, so within-batch pairs surface too).  The
@@ -240,9 +232,10 @@ def _fold_clusters_batch(
         changed.unionByName(entering),
         keys=["doc_id"],
         bucket_by=("doc_id", n_buckets),
-        metrics={"stream_batch_id": int(batch_id)},
+        metrics=marker(batch_id),
     )
-    _bound_manifests(clusters_tbl, keep_manifests)
+    if keep_manifests > 0:
+        clusters_tbl.expire_snapshots(keep_last=keep_manifests)
 
 
 def stream_corpus_ingest(
@@ -266,35 +259,20 @@ def stream_corpus_ingest(
     keeper relabel into the three ``<prefix>_*`` state tables."""
     bands_tbl, docs_tbl, clusters_tbl = _corpus_tables(wh, prefix)
 
-    def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # the clusters marker commits LAST in the fold, so it is the
-        # whole batch's applied signal
-        if (
-            clusters_tbl.exists()
-            and int(batch_id) in clusters_tbl.applied_stream_batch_ids()
-        ):
-            return
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         batch_q = quality_survivors(batch_df, min_quality_bp)
         if batch_q.isEmpty():
             return
         _fold_clusters_batch(
-            spark, batch_q, int(batch_id), bands_tbl, docs_tbl, clusters_tbl,
+            spark, batch_q, batch_id, bands_tbl, docs_tbl, clusters_tbl,
             n_hashes, shingle_size, n_bands, rows_per_band, n_buckets,
             keep_manifests,
         )
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", int(max_files_per_trigger))
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, landing_dir, schema, checkpoint_dir, fold,
+        last=clusters_tbl, max_files_per_trigger=max_files_per_trigger,
     )
-    query.awaitTermination()
 
 
 def seal_corpus(

@@ -46,6 +46,10 @@ from pyspark.sql.types import (
 
 from omop_concept_automapper_spark.operators.freq import _mg_trim
 from omop_concept_automapper_spark.operators.sketches import kmv_hash
+from omop_concept_automapper_spark.streaming.fold import (
+    read_landing,
+    sink_parquet,
+)
 
 _HH_OUTPUT = StructType(
     [
@@ -116,8 +120,7 @@ def streaming_heavy_hitter_candidates(
         raise ValueError("n_lanes must be positive")
     cap = capacity or -(-threshold_den // threshold_num)  # ceil(den/num)
     lanes = (
-        spark.readStream.schema(schema)
-        .parquet(landing_dir)
+        read_landing(spark, landing_dir, schema)
         .select(F.col(value_col).cast("string").alias("value"))
         .where(F.col("value").isNotNull())
         .withColumn(
@@ -131,15 +134,7 @@ def streaming_heavy_hitter_candidates(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        summaries.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink_parquet(summaries, output_dir, checkpoint_dir)
 
 
 def latest_candidates(spark: SparkSession, output_dir: str) -> DataFrame:

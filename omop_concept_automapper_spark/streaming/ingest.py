@@ -19,6 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from omop_concept_automapper_spark.fixtures.transcripts import TRANSCRIPTS_SCHEMA
+from omop_concept_automapper_spark.streaming.fold import (
+    compact_on_cadence,
+    drain,
+    read_landing,
+    sink_parquet,
+)
 
 
 def ingest_available_now(
@@ -34,22 +40,12 @@ def ingest_available_now(
     (e.g. mention extraction) — must be deterministic for exactly-once
     replays to be idempotent.
     """
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(landing_dir)
+    stream = read_landing(
+        spark, landing_dir, TRANSCRIPTS_SCHEMA, max_files_per_trigger=64
     )
     if transform is not None:
         stream = transform(stream)
-    query = (
-        stream.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    query.awaitTermination()
+    sink_parquet(stream, target_dir, checkpoint_dir)
 
 
 def stream_into_kg(
@@ -68,84 +64,31 @@ def stream_into_kg(
     ``foreachBatch`` + ``Trigger.AvailableNow``: each microbatch of new
     conversations runs ``Pipeline.run_incremental`` (append occurrences,
     delta-merge the mention dim, relink only new mentions, bucket-scoped
-    graph merge).  Exactly-once under replay: the occurrence append records
-    the microbatch id in its snapshot metrics and a replayed batch skips
-    the append while still driving the resumable downstream stages to
-    completion.  Invariant (tests/test_sources_streaming.py): streaming
-    batches in produces exactly the from-scratch KG over the union, and a
-    re-trigger with no new files changes nothing.
+    graph merge).  Replays are not skipped: ``run_incremental`` appends a
+    batch's occurrences once (protocol: streaming/fold.py) and still drives
+    the resumable downstream stages to completion.  Invariant
+    (tests/test_sources_streaming.py): streaming batches in produces
+    exactly the from-scratch KG over the union, and a re-trigger with no
+    new files changes nothing.
 
     Maintenance cadence: every ``compact_every`` applied microbatches the
     append-heavy ``mention_occurrences`` table is compacted and its old
     snapshots expired, so file count stays bounded instead of growing one
     data dir per batch forever (Iceberg's rewrite_data_files +
-    expire_snapshots housekeeping).  The trigger counts batches since the
-    LAST compaction (a ``compacted_through`` marker in the compact
-    snapshot's metrics), not ``len(applied) % compact_every`` — the modulo
-    form re-fired on every replayed microbatch while the count sat at a
-    multiple, and on tables with zero markers (r4 advice).  Safe under
-    replay: compaction folds applied stream_batch_id markers forward into
-    the surviving snapshot (catalog.Table.compact / expire_snapshots), so
-    the exactly-once guard outlives maintenance.  ``compact_every <= 0``
-    disables it.
+    expire_snapshots housekeeping; ``fold.compact_on_cadence``).
+    ``compact_every <= 0`` disables it.
     """
 
-    def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        occ_tbl = pipeline.wh.table("mention_occurrences")
-        replay = (
-            occ_tbl.exists()
-            and int(batch_id) in occ_tbl.applied_stream_batch_ids()
-        )
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         pipeline.run_incremental(
             batch_df, concept, relationship, ancestor, lexicon,
-            batch_id=int(batch_id),
+            batch_id=batch_id,
         )
-        if compact_every <= 0 or replay or not occ_tbl.exists():
-            return
-        n_applied = len(occ_tbl.applied_stream_batch_ids())
-        done_through = max(
-            (
-                int((s.metrics or {}).get("compacted_through", 0))
-                for s in occ_tbl.history()
-            ),
-            default=0,
+        compact_on_cadence(
+            pipeline.wh.table("mention_occurrences"), compact_every
         )
-        if n_applied - done_through >= compact_every:
-            occ_tbl.compact(metrics={"compacted_through": n_applied})
-            occ_tbl.expire_snapshots(keep_last=1)
 
-    query = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def streaming_mention_counts(
-    spark: SparkSession,
-    landing_dir: str,
-    surface_forms: list[str],
-    checkpoint_dir: str,
-    output_dir: str,
-) -> None:
-    """Windowless streaming aggregation demo: detect mentions per microbatch
-    and append occurrence rows; counts are derived downstream (append mode
-    keeps the sink idempotent under replay)."""
-    from omop_concept_automapper_spark.plans.mentions import (
-        extract_mention_occurrences,
-    )
-
-    ingest_available_now(
-        spark,
-        landing_dir,
-        output_dir,
-        checkpoint_dir,
-        transform=lambda df: extract_mention_occurrences(df, surface_forms),
+    drain(
+        spark, landing_dir, TRANSCRIPTS_SCHEMA, checkpoint_dir, fold,
+        last=None, max_files_per_trigger=64,
     )

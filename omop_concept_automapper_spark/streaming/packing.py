@@ -16,12 +16,11 @@ folds extend the same laws one microbatch at a time:
 Determinism contract (same statement as the event-TTL dedup,
 streaming/stateful.py): the output is a pure function of the BATCH
 SEQUENCE — replaying the same microbatches yields byte-identical tables
-(appends are guarded by ``stream_batch_id`` markers, and marker + data
-commit atomically) — and equals the batch operator over the union exactly
-when arrival order respects event time across batches.  Out-of-order
-arrival packs each batch internally in event-time order but cannot
-reorder already-committed offsets; that is the streaming trade-off, not
-a bug.
+(each batch appends once; protocol: streaming/fold.py) — and equals the
+batch operator over the union exactly when arrival order respects event
+time across batches.  Out-of-order arrival packs each batch internally
+in event-time order but cannot reorder already-committed offsets; that
+is the streaming trade-off, not a bug.
 
 Scale shape: per microbatch the only state read is snapshot metadata
 (a long, or one long per mixture source — mixture state is proportional
@@ -29,21 +28,20 @@ to the number of corpus sources, dozens, never data-sized), and the only
 data work is the two-phase running total over THAT batch.  Nothing
 re-reads the packed history, so per-batch cost is O(batch), matching the
 O(delta) incremental-KG fold (plans/runner.py run_incremental).  After
-each append the fold expires old manifests (keeping ``keep_manifests``)
-— expire folds the replay-guard markers and watermark metrics into the
-current manifest and, on an append-only table, deletes no data, so the
-per-batch state reads stay O(keep_manifests) instead of O(all batches
-ever) at zero write amplification.  DATA-file compaction of the
-ever-growing packed table is deliberately NOT done per-batch (rewriting
-the whole history every N batches is O(T^2/N) — the trap the
-occurrence-table policy avoids by reading only appended dirs); run
-``table.compact()`` on the consumer's own schedule — maintenance carries
-the watermarks forward, so it is safe at any point.
+each append the fold keeps ``keep_manifests`` manifests
+(``fold.append_once``), so the per-batch state reads stay
+O(keep_manifests) instead of O(all batches ever) at zero write
+amplification.  DATA-file compaction of the ever-growing packed table is
+deliberately NOT done per-batch (rewriting the whole history every N
+batches is O(T^2/N) — the trap the occurrence-table policy avoids by
+reading only appended dirs); run ``table.compact()`` on the consumer's
+own schedule — maintenance carries the watermarks forward, so it is safe
+at any point.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -59,6 +57,7 @@ from omop_concept_automapper_spark.operators.packing import (
     chunk_route_cols,
     global_running_total,
 )
+from omop_concept_automapper_spark.streaming.fold import append_once, drain
 
 DOCS_STREAM_SCHEMA = StructType(
     [
@@ -85,16 +84,6 @@ def _last_metric(table: Table, key: str, default):
     return default
 
 
-def _bound_manifests(table: Table, keep_manifests: int) -> None:
-    """Expire old manifests so per-batch state reads stay bounded.  On an
-    append-only table every data dir is still referenced by the current
-    snapshot, so this deletes metadata only; markers and watermarks fold
-    into the surviving manifest (catalog expire_snapshots carry)."""
-    if keep_manifests <= 0 or not table.exists():
-        return
-    table.expire_snapshots(keep_last=keep_manifests)
-
-
 def stream_pack_sequences(
     spark: SparkSession,
     landing_dir: str,
@@ -111,11 +100,7 @@ def stream_pack_sequences(
     ``max_files_per_trigger=1`` to force multi-batch continuation;
     production callers batch wider to amortize per-commit overhead."""
 
-    def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if table.exists() and int(batch_id) in table.applied_stream_batch_ids():
-            return
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         base = int(_last_metric(table, "tokens_through", 0))
         toks = batch_df.select(
             "doc_id",
@@ -131,25 +116,15 @@ def stream_pack_sequences(
         # the inclusive running total's max IS the batch total, and cum is
         # already localCheckpoint-ed — no second scan/tokenize of batch_df
         batch_total = cum.agg(F.max("_cum")).collect()[0][0] or 0
-        table.append(
-            out,
-            metrics={
-                "stream_batch_id": int(batch_id),
-                "tokens_through": base + int(batch_total),
-            },
+        append_once(
+            table, out, batch_id, keep_manifests,
+            tokens_through=base + int(batch_total),
         )
-        _bound_manifests(table, keep_manifests)
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", int(max_files_per_trigger))
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, landing_dir, schema, checkpoint_dir, fold,
+        last=table, max_files_per_trigger=max_files_per_trigger,
     )
-    query.awaitTermination()
 
 
 def stream_mixture_interleave(
@@ -171,11 +146,7 @@ def stream_mixture_interleave(
     if any(w <= 0 for _, w in w_rows):
         raise ValueError("mixture weights must be positive integers")
 
-    def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if table.exists() and int(batch_id) in table.applied_stream_batch_ids():
-            return
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         bases = {
             str(k): int(v)
             for k, v in _last_metric(table, "source_seq_through", {}).items()
@@ -216,22 +187,12 @@ def stream_mixture_interleave(
         new_bases = dict(bases)
         for s, n in tallies.items():
             new_bases[s] = new_bases.get(s, 0) + n
-        table.append(
-            out,
-            metrics={
-                "stream_batch_id": int(batch_id),
-                "source_seq_through": new_bases,
-            },
+        append_once(
+            table, out, batch_id, keep_manifests,
+            source_seq_through=new_bases,
         )
-        _bound_manifests(table, keep_manifests)
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", int(max_files_per_trigger))
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, landing_dir, schema, checkpoint_dir, fold,
+        last=table, max_files_per_trigger=max_files_per_trigger,
     )
-    query.awaitTermination()

@@ -21,7 +21,7 @@ State (two catalog tables under one prefix):
 Per-batch fold — O(batch + touched conversations' turns), never
 O(history):
 
-1. append the batch's turns (own marker);
+1. append the batch's turns (once per batch id);
 2. affected = the batch's DISTINCT conversation keys (broadcast);
 3. run the BATCH operator over the turns table semi-joined to affected
    conversations only;
@@ -29,12 +29,10 @@ O(history):
    adding turns cannot remove a response's context, so upsert (without
    delete) converges to the batch answer.
 
-Exactly-once: the PAIRS marker commits last and is the fold's applied
-signal.  A crash after the turns append but before the pairs upsert
-replays into an append that skips (its marker is present) and a recompute
-off the unchanged turns state — byte-identical.  After all batches, the
-pairs table EQUALS the batch operator over the union under ARBITRARY
-arrival order (pinned by tests/test_streaming_sft.py).
+The pairs table commits last and carries the applied signal (protocol:
+streaming/fold.py).  After all batches, the pairs table EQUALS the batch
+operator over the union under ARBITRARY arrival order (pinned by
+tests/test_streaming_sft.py).
 """
 
 from __future__ import annotations
@@ -46,14 +44,15 @@ from omop_concept_automapper_spark.catalog import Table, Warehouse
 from omop_concept_automapper_spark.operators.sft import (
     context_response_pairs,
 )
+from omop_concept_automapper_spark.streaming.fold import (
+    append_once,
+    drain,
+    marker,
+)
 
 TURNS_STREAM_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string"
 )
-
-
-def _sft_tables(wh: Warehouse, prefix: str) -> tuple[Table, Table]:
-    return wh.table(f"{prefix}_turns"), wh.table(f"{prefix}_pairs")
 
 
 def fold_sft_batch(
@@ -71,13 +70,7 @@ def fold_sft_batch(
     """One microbatch of the pair fold (split from the stream wiring so
     tests and a seal path can drive it directly)."""
     batch_turns = batch_turns.localCheckpoint(eager=True)
-    if not (
-        turns_tbl.exists()
-        and int(batch_id) in turns_tbl.applied_stream_batch_ids()
-    ):
-        turns_tbl.append(
-            batch_turns, metrics={"stream_batch_id": int(batch_id)}
-        )
+    append_once(turns_tbl, batch_turns, batch_id)
     affected = batch_turns.select(conv_col).distinct()
     touched = turns_tbl.read().join(
         F.broadcast(affected), conv_col, "left_semi"
@@ -86,16 +79,9 @@ def fold_sft_batch(
         touched, conv_col, order_cols, role_col, text_col,
         response_role, k=k,
     )
-    if pairs_tbl.exists():
-        pairs_tbl.merge_upsert(
-            pairs,
-            keys=[conv_col] + order_cols,
-            metrics={"stream_batch_id": int(batch_id)},
-        )
-    else:
-        pairs_tbl.overwrite(
-            pairs, metrics={"stream_batch_id": int(batch_id)}
-        )
+    pairs_tbl.merge_upsert(
+        pairs, keys=[conv_col] + order_cols, metrics=marker(batch_id)
+    )
 
 
 def stream_sft_pairs(
@@ -116,29 +102,16 @@ def stream_sft_pairs(
     """Drain ``landing_dir`` (Trigger.AvailableNow), folding each turn
     microbatch into the ``<prefix>_turns`` / ``<prefix>_pairs`` tables."""
     order_cols = order_cols or ["turn_idx"]
-    turns_tbl, pairs_tbl = _sft_tables(wh, prefix)
+    turns_tbl = wh.table(f"{prefix}_turns")
+    pairs_tbl = wh.table(f"{prefix}_pairs")
 
-    def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # the pairs marker commits LAST — it is the applied signal
-        if (
-            pairs_tbl.exists()
-            and int(batch_id) in pairs_tbl.applied_stream_batch_ids()
-        ):
-            return
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         fold_sft_batch(
-            batch_df, int(batch_id), turns_tbl, pairs_tbl,
+            batch_df, batch_id, turns_tbl, pairs_tbl,
             conv_col, order_cols, role_col, text_col, response_role, k,
         )
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", int(max_files_per_trigger))
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, landing_dir, schema, checkpoint_dir, fold,
+        last=pairs_tbl, max_files_per_trigger=max_files_per_trigger,
     )
-    query.awaitTermination()

@@ -23,10 +23,10 @@ State (three catalog tables under one prefix):
 
 Per-batch fold — O(batch + crossed-gram docs), never O(corpus):
 
-1. append batch docs + batch gram counts (own markers);
+1. append batch docs + batch gram counts (once per batch id);
 2. crossing detection is REPLAY-STABLE: read total counts (which include
-   this batch exactly once, because the append above is marker-skipped
-   on replay) restricted to the batch's grams; with ``b`` = the batch's
+   this batch exactly once, because the append above is skipped on
+   replay) restricted to the batch's grams; with ``b`` = the batch's
    own contribution, a gram crossed iff ``total - b < min_count <=
    total``.  Computing "prior" counts directly would break crash-replay
    (a replay after the grams append would see the batch double-counted
@@ -39,9 +39,9 @@ Per-batch fold — O(batch + crossed-gram docs), never O(corpus):
    span sets.  Spans only ever grow/merge (counts are monotone), so a
    doc absent from the delta is exactly a doc whose spans are unchanged.
 
-Exactly-once: the SPANS marker commits last and is the fold's applied
-signal.  After all batches the spans table EQUALS the batch operator
-over the union under ARBITRARY arrival order
+The spans table commits last and carries the applied signal (protocol:
+streaming/fold.py).  After all batches the spans table EQUALS the batch
+operator over the union under ARBITRARY arrival order
 (tests/test_streaming_spans.py).
 """
 
@@ -49,64 +49,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from omop_concept_automapper_spark.catalog import Table, Warehouse
-from omop_concept_automapper_spark.functions.text import ngram_windows
-from omop_concept_automapper_spark.operators.dedup import tokens_col
+from omop_concept_automapper_spark.operators.dedup import (
+    gram_positions,
+    island_spans,
+)
+from omop_concept_automapper_spark.streaming.fold import (
+    append_once,
+    drain,
+    marker,
+)
 
 SPAN_DOCS_SCHEMA = "doc_id bigint, text string"
-
-
-def _span_tables(wh: Warehouse, prefix: str) -> tuple[Table, Table, Table]:
-    return (
-        wh.table(f"{prefix}_docs"),
-        wh.table(f"{prefix}_grams"),
-        wh.table(f"{prefix}_spans"),
-    )
-
-
-def _doc_grams(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, _pos 1-based, _len, _gram) for every gram position."""
-    base = docs.where(F.col("text").isNotNull()).select(
-        "doc_id", tokens_col("text").alias("_toks")
-    )
-    return base.select(
-        "doc_id",
-        F.size("_toks").alias("_len"),
-        F.posexplode(ngram_windows(F.col("_toks"), n)).alias(
-            "_pos0", "_gram"
-        ),
-    ).select(
-        "doc_id", "_len", (F.col("_pos0") + 1).alias("_pos"), "_gram"
-    )
-
-
-def _spans_for(marked: DataFrame, n: int) -> DataFrame:
-    """Island-merge marked (doc_id, _pos, _len) rows into spans —
-    identical arithmetic to duplicate_ngram_spans."""
-    width = F.least(F.lit(n), F.col("_len"))
-    w = Window.partitionBy("doc_id").orderBy("_pos")
-    flagged = marked.select(
-        "doc_id",
-        "_pos",
-        width.alias("_w"),
-        F.when(F.col("_pos") > F.lag("_pos").over(w) + width, 1)
-        .otherwise(0)
-        .alias("_new"),
-    )
-    islands = flagged.select(
-        "doc_id", "_pos", "_w", F.sum("_new").over(w).alias("_island")
-    )
-    return (
-        islands.groupBy("doc_id", "_island")
-        .agg(
-            F.min("_pos").alias("span_from"),
-            (F.max("_pos") + F.max("_w")).alias("span_to"),
-            F.count(F.lit(1)).alias("n_dup_grams"),
-        )
-        .drop("_island")
-    )
 
 
 def fold_spans_batch(
@@ -122,23 +77,13 @@ def fold_spans_batch(
     tests and a seal path can drive it directly)."""
     batch_docs = batch_docs.localCheckpoint(eager=True)
     bg = (
-        _doc_grams(batch_docs, n)
+        gram_positions(batch_docs, n)
         .groupBy("_gram", "doc_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    if not (
-        docs_tbl.exists()
-        and int(batch_id) in docs_tbl.applied_stream_batch_ids()
-    ):
-        docs_tbl.append(
-            batch_docs, metrics={"stream_batch_id": int(batch_id)}
-        )
-    if not (
-        grams_tbl.exists()
-        and int(batch_id) in grams_tbl.applied_stream_batch_ids()
-    ):
-        grams_tbl.append(bg, metrics={"stream_batch_id": int(batch_id)})
+    append_once(docs_tbl, batch_docs, batch_id)
+    append_once(grams_tbl, bg, batch_id)
 
     all_grams = grams_tbl.read()
     batch_gram_set = bg.select("_gram").distinct()
@@ -163,7 +108,7 @@ def fold_spans_batch(
     # re-derive positions for affected docs only; their grams' global
     # dup status comes from the index restricted to those grams
     aff_docs = docs_tbl.read().join(F.broadcast(affected), "doc_id", "left_semi")
-    g = _doc_grams(aff_docs, n)
+    g = gram_positions(aff_docs, n)
     aff_gram_set = g.select("_gram").distinct()
     dup = (
         all_grams.join(aff_gram_set, "_gram", "left_semi")
@@ -173,16 +118,9 @@ def fold_spans_batch(
         .select("_gram")
     )
     marked = g.join(dup, "_gram", "left_semi")
-    spans = _spans_for(marked, n)
-    if spans_tbl.exists():
-        spans_tbl.merge_upsert(
-            spans, keys=["doc_id"],
-            metrics={"stream_batch_id": int(batch_id)},
-        )
-    else:
-        spans_tbl.overwrite(
-            spans, metrics={"stream_batch_id": int(batch_id)}
-        )
+    spans_tbl.merge_upsert(
+        island_spans(marked, n), keys=["doc_id"], metrics=marker(batch_id)
+    )
 
 
 def stream_duplicate_spans(
@@ -198,29 +136,16 @@ def stream_duplicate_spans(
 ) -> None:
     """Drain ``landing_dir`` (Trigger.AvailableNow), folding each doc
     microbatch into the ``<prefix>_*`` span state tables."""
-    docs_tbl, grams_tbl, spans_tbl = _span_tables(wh, prefix)
+    docs_tbl, grams_tbl, spans_tbl = (
+        wh.table(f"{prefix}_{name}") for name in ("docs", "grams", "spans")
+    )
 
-    def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # the spans marker commits LAST — it is the applied signal
-        if (
-            spans_tbl.exists()
-            and int(batch_id) in spans_tbl.applied_stream_batch_ids()
-        ):
-            return
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         fold_spans_batch(
-            batch_df, int(batch_id), docs_tbl, grams_tbl, spans_tbl,
-            n, min_count,
+            batch_df, batch_id, docs_tbl, grams_tbl, spans_tbl, n, min_count
         )
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", int(max_files_per_trigger))
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, landing_dir, schema, checkpoint_dir, fold,
+        last=spans_tbl, max_files_per_trigger=max_files_per_trigger,
     )
-    query.awaitTermination()

@@ -11,8 +11,9 @@ continuously-fed transcripts table needs:
   with a watermark for late data; append-mode so each window is emitted
   exactly once after the watermark passes.
 
-Both run under ``Trigger.AvailableNow`` in tests; on a live cluster the
-same code runs continuously with the checkpoint dir providing recovery.
+Both drain under ``Trigger.AvailableNow`` (source and sink:
+streaming/fold.py); on a live cluster the same code runs continuously
+with the checkpoint dir providing recovery.
 """
 
 from __future__ import annotations
@@ -30,6 +31,10 @@ from pyspark.sql.types import (
 )
 
 from omop_concept_automapper_spark.functions.text import fingerprint
+from omop_concept_automapper_spark.streaming.fold import (
+    read_landing,
+    sink_parquet,
+)
 
 _DEDUP_OUTPUT = StructType(
     [
@@ -39,29 +44,28 @@ _DEDUP_OUTPUT = StructType(
     ]
 )
 _DEDUP_STATE = StructType([StructField("seen", BooleanType())])
+_LAST_SEEN_STATE = StructType([StructField("last_seen_ms", LongType())])
 
 
-def _dedup_fn(key, pdfs, state: GroupState):
-    if state.exists:
-        # key already emitted in a previous microbatch: drop everything
-        for _ in pdfs:
-            pass
-        return iter(())
-    # accumulate across ALL Arrow chunks of the group: a key whose microbatch
-    # data spans multiple chunks must still emit the global-min doc_id
+def _min_doc_row(pdfs, emit: bool = True):
+    """The min-doc_id row over ALL Arrow chunks of a group (a key whose
+    microbatch data spans several chunks must still emit its global min);
+    with ``emit`` False the chunks are consumed and nothing is emitted."""
     first = None
     for pdf in pdfs:
-        if len(pdf) == 0:
+        if not emit or len(pdf) == 0:
             continue
-        i = pdf["doc_id"].idxmin()
-        row = pdf.loc[[i], ["fingerprint", "doc_id", "text"]]
+        row = pdf.loc[[pdf["doc_id"].idxmin()], ["fingerprint", "doc_id", "text"]]
         if first is None or int(row["doc_id"].iloc[0]) < int(first["doc_id"].iloc[0]):
             first = row
-    state.update((True,))
     return iter(()) if first is None else iter([first])
 
 
-_DEDUP_TTL_STATE = StructType([StructField("last_seen_ms", LongType())])
+def _dedup_fn(key, pdfs, state: GroupState):
+    # a key emitted in a previous microbatch drops everything
+    emit = not state.exists
+    state.update((True,))
+    return _min_doc_row(pdfs, emit)
 
 
 def _make_dedup_ttl_fn(ttl_ms: int):
@@ -91,33 +95,9 @@ def _make_dedup_ttl_fn(ttl_ms: int):
         state.update((now_ms,))
         # eviction horizon: TTL + slack so in-band staleness wins races
         state.setTimeoutDuration(ttl_ms * 2)
-        if not stale:
-            for _ in pdfs:
-                pass
-            return iter(())
-        first = None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            i = pdf["doc_id"].idxmin()
-            row = pdf.loc[[i], ["fingerprint", "doc_id", "text"]]
-            if first is None or int(row["doc_id"].iloc[0]) < int(
-                first["doc_id"].iloc[0]
-            ):
-                first = row
-        return iter(()) if first is None else iter([first])
+        return _min_doc_row(pdfs, stale)
 
     return fn
-
-
-_DEDUP_EVENT_OUTPUT = StructType(
-    [
-        StructField("fingerprint", StringType()),
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-    ]
-)
-_DEDUP_EVENT_STATE = StructType([StructField("last_seen_ms", LongType())])
 
 
 def _make_dedup_event_ttl_fn(ttl_ms: int):
@@ -219,64 +199,27 @@ def streaming_first_seen_dedup(
     """
     if state_ttl_ms is not None and event_ttl_ms is not None:
         raise ValueError("pass at most one of state_ttl_ms / event_ttl_ms")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(landing_dir)
-        .withColumn("fingerprint", fingerprint(F.col("text")))
+    stream = read_landing(spark, landing_dir, schema).withColumn(
+        "fingerprint", fingerprint(F.col("text"))
     )
     if event_ttl_ms is not None:
-        deduped = (
-            stream.withWatermark("ts", watermark_delay)
-            .groupBy("fingerprint")
-            .applyInPandasWithState(
-                _make_dedup_event_ttl_fn(int(event_ttl_ms)),
-                outputStructType=_DEDUP_EVENT_OUTPUT,
-                stateStructType=_DEDUP_EVENT_STATE,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return None
-    if state_ttl_ms is None:
-        deduped = stream.groupBy("fingerprint").applyInPandasWithState(
-            _dedup_fn,
-            outputStructType=_DEDUP_OUTPUT,
-            stateStructType=_DEDUP_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return None
+        stream = stream.withWatermark("ts", watermark_delay)
+        fn = _make_dedup_event_ttl_fn(int(event_ttl_ms))
+        state, timeout = _LAST_SEEN_STATE, GroupStateTimeout.EventTimeTimeout
+    elif state_ttl_ms is not None:
+        fn = _make_dedup_ttl_fn(int(state_ttl_ms))
+        state, timeout = _LAST_SEEN_STATE, GroupStateTimeout.ProcessingTimeTimeout
+    else:
+        fn, state, timeout = _dedup_fn, _DEDUP_STATE, GroupStateTimeout.NoTimeout
     deduped = stream.groupBy("fingerprint").applyInPandasWithState(
-        _make_dedup_ttl_fn(int(state_ttl_ms)),
+        fn,
         outputStructType=_DEDUP_OUTPUT,
-        stateStructType=_DEDUP_TTL_STATE,
+        stateStructType=state,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=timeout,
     )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return sink_parquet(
+        deduped, output_dir, checkpoint_dir, drained=state_ttl_ms is None
     )
 
 
@@ -299,8 +242,7 @@ def windowed_mention_counts(
 
     detector = make_mention_detector(surface_forms)
     stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .parquet(landing_dir)
+        read_landing(spark, landing_dir, TRANSCRIPTS_SCHEMA)
         .withWatermark("ts", watermark)
         .select("ts", F.explode(detector(F.col("text"))).alias("mention_text"))
         .groupBy(F.window("ts", window).alias("win"), "mention_text")
@@ -312,12 +254,4 @@ def windowed_mention_counts(
             "n",
         )
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink_parquet(stream, output_dir, checkpoint_dir)

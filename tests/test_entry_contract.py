@@ -109,6 +109,27 @@ def test_vector_operators_share_one_top_k_and_one_rank_merge():
                 )
 
 
+def test_streaming_wiring_lives_in_the_fold_driver():
+    """Only streaming/fold.py wires Structured Streaming queries and reads
+    the exactly-once markers; any other streaming module that touches
+    them carries its own copy of the drain, the sink or the replay
+    check."""
+    wiring = {
+        "readStream",
+        "writeStream",
+        "foreachBatch",
+        "awaitTermination",
+        "applied_stream_batch_ids",
+    }
+    pkg = Path(entry_mod.__file__).parent / "omop_concept_automapper_spark/streaming"
+    for path in sorted(pkg.glob("*.py")):
+        if path.name == "fold.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            assert name not in wiring, f"{path.name}:{node.lineno} uses {name}"
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
