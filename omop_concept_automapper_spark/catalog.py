@@ -43,7 +43,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _CURRENT = "_current"
@@ -464,30 +464,41 @@ class Table:
     def _merge_bucketed(
         self, df: DataFrame, keys: list[str], spec: dict, metrics: dict | None
     ) -> Snapshot:
+        """Each delta row is computed once.  A table with no buckets yet has
+        nothing to merge with, so the delta is written as is.  Otherwise
+        one eager ``localCheckpoint`` pins the delta, and its job observes
+        the delta's bucket ids; the touched buckets are read and the merged
+        rows written from the pinned rows.  Either way the buckets written
+        are exactly the buckets the delta touches."""
         prev = self.snapshot()
         prev_buckets: dict = dict(prev.buckets or {}) if prev else {}
-        delta = df
-        affected = sorted(
-            r[0]
-            for r in df.select(self._bucket_col(spec).alias("b"))
-            .distinct()
-            .collect()
-        )
-        touched_dirs = [
-            d for b in affected for d in prev_buckets.get(str(b), [])
-        ]
-        if touched_dirs:
-            current_touched = self._read_dirs(touched_dirs, prev.schema)
-            kept = current_touched.join(
-                delta.select(*keys).distinct(), on=keys, how="left_anti"
-            )
-            merged = kept.unionByName(delta.select(*current_touched.columns))
-        else:
+        merged = df
+        if prev_buckets:
+            from pyspark.sql import functions as F
+
+            seen = Observation()
+            with _job_description(
+                self.spark.sparkContext,
+                f"merge-pin {os.path.basename(self.path)}",
+            ):
+                delta = df.observe(
+                    seen, F.collect_set(self._bucket_col(spec)).alias("b")
+                ).localCheckpoint(eager=True)
+            touched_dirs = [
+                d for b in sorted(seen.get["b"])
+                for d in prev_buckets.get(str(b), [])
+            ]
             merged = delta
+            if touched_dirs:
+                current_touched = self._read_dirs(touched_dirs, prev.schema)
+                kept = current_touched.join(
+                    delta.select(*keys).distinct(), on=keys, how="left_anti"
+                )
+                merged = kept.unionByName(delta.select(*current_touched.columns))
         sid, written = self._write_bucketed_dir(merged, spec, colocate=True)
         new_buckets = dict(prev_buckets)
-        for b in affected:
-            new_buckets[str(b)] = written.get(str(b), [])
+        for b in sorted(written, key=int):
+            new_buckets[b] = written[b]
         live = [d for dirs in new_buckets.values() for d in dirs]
         data_dir = os.path.join(self.path, _DATA, sid)
         total, lineage = self._partition_lineage(data_dir)
@@ -496,7 +507,7 @@ class Table:
             {
                 **(metrics or {}),
                 "lineage": lineage,
-                "buckets_rewritten": len(affected),
+                "buckets_rewritten": len(written),
                 "buckets_total": spec["n_buckets"],
             },
             _read_schema(merged),

@@ -65,10 +65,10 @@ def extract_mention_occurrences(
         mentions_col = jvm_mention_detector(surface_forms)(F.col("text"))
     else:
         mentions_col = make_mention_detector(surface_forms)(F.col("text"))
-    return (
-        transcripts.select("conv_id", "turn_idx", mentions_col.alias("mentions"))
-        .where(F.size("mentions") > 0)
-        .select("conv_id", "turn_idx", F.explode("mentions").alias("mention_text"))
+    # explode drops turns with no mention; a filter on the array's size
+    # would be pushed below the projection and run the detector again
+    return transcripts.select(
+        "conv_id", "turn_idx", F.explode(mentions_col).alias("mention_text")
     )
 
 
@@ -79,9 +79,12 @@ def build_mention_table(
 ) -> DataFrame:
     """Distinct mentions with freq + drug metadata.
 
-    ``lexicon`` rows carry {mention_text, is_drug}; is_drug joins in via a
-    broadcast map (tiny dim).  ATC7 codes are extracted from the mention
-    text itself with the reference's anchored regex (utils.py:152-164).
+    ``lexicon`` rows carry {mention_text, is_drug}; a form is a drug if any
+    of its entries says so, looked up with ``isin`` over the drug forms, so
+    a form listed twice still gives one row per mention.  ATC7 codes are
+    extracted from the mention text itself with the reference's anchored
+    regex (utils.py:152-164).  The lookup needs no session; ``spark``
+    stays for existing callers.
     """
     mentions = salted_agg(
         occurrences,
@@ -89,19 +92,15 @@ def build_mention_table(
         aggs=[("conv_id", "count", "freq")],
         salt_cols=["conv_id", "turn_idx"],
     )
-    meta = spark.createDataFrame(
-        [(e["mention_text"], bool(e["is_drug"])) for e in lexicon],
-        "mention_text string, is_drug boolean",
-    )
-    return (
-        mentions.join(F.broadcast(meta), "mention_text", "left")
-        .select(
-            F.xxhash64("mention_text").alias("mention_id"),
-            # second 128-bit half: same hash, seed varied via a literal column
-            F.xxhash64(F.lit(1), F.col("mention_text")).alias("mention_id2"),
-            "mention_text",
-            F.coalesce("is_drug", F.lit(False)).alias("is_drug"),
-            atc7_extract(F.col("mention_text")).alias("atc7"),
-            F.col("freq").cast("long").alias("freq"),
-        )
+    drug_forms = sorted({e["mention_text"] for e in lexicon if e["is_drug"]})
+    return mentions.select(
+        F.xxhash64("mention_text").alias("mention_id"),
+        # second 128-bit half: same hash, seed varied via a literal column
+        F.xxhash64(F.lit(1), F.col("mention_text")).alias("mention_id2"),
+        "mention_text",
+        F.coalesce(F.col("mention_text").isin(drug_forms), F.lit(False)).alias(
+            "is_drug"
+        ),
+        atc7_extract(F.col("mention_text")).alias("atc7"),
+        F.col("freq").cast("long").alias("freq"),
     )

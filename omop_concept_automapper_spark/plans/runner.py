@@ -61,6 +61,11 @@ class Pipeline:
         self.spark = spark
         self.wh = warehouse
         self.cfg = config or PipelineConfig()
+        # (frame, snapshot id) of the last vocab read stage_vocab_embeddings
+        # returned, and (snapshot id, digest) of the last vocab snapshot
+        # hashed — see _vocab_digest
+        self._vocab_read: tuple[DataFrame, str] | None = None
+        self._vocab_hashed: tuple[str, dict] | None = None
 
     # ------------------------------------------------------------ stages
     def stage_vocab_embeddings(
@@ -80,7 +85,7 @@ class Pipeline:
         recorded_v = self._recorded_embedder_version(tbl)
         stale = tbl.exists() and recorded_v != EMBEDDER_VERSION
         if self.wh.stage_complete("vocab_embeddings") and not stale:
-            return tbl.read()
+            return self._read_vocab(tbl)
         already = tbl.read() if (tbl.exists() and not stale) else None
         fresh = build_vocab_embeddings(
             concept, relationship, ancestor,
@@ -94,7 +99,13 @@ class Pipeline:
         self.wh.mark_stage_complete(
             "vocab_embeddings", {"rows_appended": snap.rows_written}
         )
-        return tbl.read()
+        return self._read_vocab(tbl)
+
+    def _read_vocab(self, tbl) -> DataFrame:
+        sid = tbl.current_snapshot_id()
+        frame = tbl.read(sid)
+        self._vocab_read = (frame, sid)
+        return frame
 
     @staticmethod
     def _recorded_link_config(tbl) -> str | None:
@@ -134,7 +145,14 @@ class Pipeline:
         if self.wh.stage_complete("mentions"):
             return tbl.read()
         surface_forms = [e["mention_text"] for e in lexicon]
-        occurrences = extract_mention_occurrences(transcripts, surface_forms)
+        # the detector output is pinned (lazy localCheckpoint) before the
+        # range shuffle: the shuffle's sampling job computes and keeps it,
+        # and the shuffle reads the kept rows instead of running the
+        # detector UDF a second time
+        with _job_description(self.spark.sparkContext, "build: detect occurrences"):
+            occurrences = extract_mention_occurrences(
+                transcripts, surface_forms
+            ).localCheckpoint(eager=False)
         # explicit range partitioning on conv_id (north rule): occurrence
         # rows — much smaller than the turns they came from — land
         # conv-contiguous on disk, so per-conversation reads (triple
@@ -165,21 +183,9 @@ class Pipeline:
         ATC-mapping change with unchanged names/domains must invalidate the
         index, or linking serves stale maps-to-value drug filters — r4
         advice), and the embedder version standing in for the vector column
-        (vectors are a pure function of (concept_name, EMBEDDER_VERSION))."""
-        row = vocab_embeddings.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(
-                    F.xxhash64(
-                        "concept_id",
-                        "concept_name",
-                        "domain_id",
-                        F.array_join("atc7_codes", ","),
-                    ).cast("decimal(38,0)")
-                ),
-                F.lit(0),
-            ).alias("h"),
-        ).collect()[0]
+        (vectors are a pure function of (concept_name, EMBEDDER_VERSION)).
+        The config part is composed at every call; the vocab part comes
+        from :meth:`_vocab_digest`."""
         return json.dumps(
             {
                 "k_standard": self.cfg.k_standard,
@@ -187,12 +193,43 @@ class Pipeline:
                 "target_domains": sorted(self.cfg.target_domains)
                 if self.cfg.target_domains
                 else None,
-                "vocab_n": int(row["n"]),
-                "vocab_h": str(row["h"]),
+                **self._vocab_digest(vocab_embeddings),
                 "embedder_v": EMBEDDER_VERSION,
             },
             sort_keys=True,
         )
+
+    def _vocab_digest(self, vocab_embeddings: DataFrame) -> dict:
+        """``vocab_n``/``vocab_h`` of the vocabulary frame.  A frame that
+        :meth:`stage_vocab_embeddings` returned reads one snapshot of the
+        vocab table, whose data dirs never change, so its digest is kept
+        under that snapshot id and reused while the snapshot is current:
+        a fold over an unchanged vocabulary hashes nothing.  Any other
+        frame is hashed."""
+        sid = None
+        if self._vocab_read is not None and self._vocab_read[0] is vocab_embeddings:
+            sid = self._vocab_read[1]
+            if self._vocab_hashed is not None and self._vocab_hashed[0] == sid:
+                return self._vocab_hashed[1]
+        with _job_description(self.spark.sparkContext, "links: vocab digest"):
+            row = vocab_embeddings.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(
+                    F.sum(
+                        F.xxhash64(
+                            "concept_id",
+                            "concept_name",
+                            "domain_id",
+                            F.array_join("atc7_codes", ","),
+                        ).cast("decimal(38,0)")
+                    ),
+                    F.lit(0),
+                ).alias("h"),
+            ).collect()[0]
+        digest = {"vocab_n": int(row["n"]), "vocab_h": str(row["h"])}
+        if sid is not None:
+            self._vocab_hashed = (sid, digest)
+        return digest
 
     def stage_links(
         self, mentions: DataFrame, vocab_embeddings: DataFrame
@@ -235,9 +272,11 @@ class Pipeline:
                 "mention_id", "mention_id2"
             )
             todo = mentions.join(done, ["mention_id", "mention_id2"], "left_anti")
-            # one probe, reused by the commit below
-            clean = already.where(F.col("error").isNotNull()).isEmpty()
-            if clean and todo.isEmpty():
+            with _job_description(self.spark.sparkContext, "links: resume probes"):
+                # one probe, reused by the commit below
+                clean = already.where(F.col("error").isNotNull()).isEmpty()
+                noop = clean and todo.isEmpty()
+            if noop:
                 # resume no-op: every mention is already cleanly linked
                 # under this exact config/vocab fingerprint — the prior
                 # snapshot IS the answer.  Skip the link job and the
@@ -264,16 +303,18 @@ class Pipeline:
         # even when the vocab rows are unchanged (r5 self-review finding
         # #1 — without it the no-op check served version-1 vectors back).
         fp_d = json.loads(fp)
-        build_vocab_index_files(
-            vocab_embeddings.select(
-                "concept_id", "concept_name", "domain_id", "atc7_codes", "vector"
-            ),
-            index_path,
-            n_shards=int(self.cfg.extra.get("n_index_shards", 4)),
-            content_key=(
-                f"{fp_d['vocab_n']}:{fp_d['vocab_h']}:e{fp_d['embedder_v']}"
-            ),
-        )
+        with _job_description(self.spark.sparkContext, "links: vocab index"):
+            build_vocab_index_files(
+                vocab_embeddings.select(
+                    "concept_id", "concept_name", "domain_id", "atc7_codes",
+                    "vector",
+                ),
+                index_path,
+                n_shards=int(self.cfg.extra.get("n_index_shards", 4)),
+                content_key=(
+                    f"{fp_d['vocab_n']}:{fp_d['vocab_h']}:e{fp_d['embedder_v']}"
+                ),
+            )
         # the linker spreads its input over every core; the rebalance lets
         # AQE size the written files instead (one file for a small table),
         # since every later fold reads the links table in dozens of jobs and
@@ -370,7 +411,8 @@ class Pipeline:
             # single-target is structural here: links hold one row per
             # 128-bit subject (last-write-wins), so the star probe would be
             # a redundant extra scan per fold (r4 verdict ask #6)
-            nodes = build_nodes(accepted, single_target=True)
+            with _job_description(self.spark.sparkContext, "graph: build nodes"):
+                nodes = build_nodes(accepted, single_target=True)
             # last-write-wins per subject (ST2 remap semantics,
             # mapping.py:112-132); bucketed on the LONG key halves so every
             # merge shuffle hashes two longs, never the rendered strings
@@ -425,6 +467,7 @@ class Pipeline:
         deletes go through reset/ST2-remap), and a format mismatch never
         reaches here (stage_graph gates on GRAPH_FORMAT).
         """
+        sc = self.spark.sparkContext
         prior_edges = edges_tbl.read()
         new_edges = build_edges(accepted, self.cfg.target_domains)
         # full-row change detector: the 128-bit subject key plus a hash of
@@ -437,20 +480,21 @@ class Pipeline:
             "mapping_method",
             F.array_join("target_domains", ","),
         )
-        delta_edges = (
-            new_edges.withColumn("_ph", payload_h)
-            .join(
-                prior_edges.select(
-                    "subj_h1", "subj_h2", payload_h.alias("_ph")
-                ),
-                ["subj_h1", "subj_h2", "_ph"],
-                "left_anti",
+        with _job_description(sc, "graph: edge delta"):
+            delta_edges = (
+                new_edges.withColumn("_ph", payload_h)
+                .join(
+                    prior_edges.select(
+                        "subj_h1", "subj_h2", payload_h.alias("_ph")
+                    ),
+                    ["subj_h1", "subj_h2", "_ph"],
+                    "left_anti",
+                )
+                .drop("_ph")
+                .localCheckpoint(eager=True)  # reused 4x below; O(delta) rows
             )
-            .drop("_ph")
-            .localCheckpoint(eager=True)  # reused 4x below; O(delta) rows
-        )
-        if delta_edges.isEmpty():
-            return edges_tbl.snapshot(), nodes_tbl.snapshot()
+            if delta_edges.isEmpty():
+                return edges_tbl.snapshot(), nodes_tbl.snapshot()
         delta = delta_edges.select(
             F.col("subj_h1").alias("mention_id"),
             F.col("subj_h2").alias("mention_id2"),
@@ -534,9 +578,10 @@ class Pipeline:
                 "label",
             )
         )
-        partial_nodes = build_nodes(cc_input, single_target=True).unionByName(
-            orphan_concepts
-        )
+        with _job_description(sc, "graph: nodes delta"):
+            partial_nodes = build_nodes(
+                cc_input, single_target=True
+            ).unionByName(orphan_concepts)
         gm = {**gm, "delta_scoped": True}
         # nodes commit FIRST: the empty-delta early return above detects
         # "already applied" from the EDGES table, so edges must be the
@@ -621,7 +666,8 @@ class Pipeline:
                 new_occ = extract_mention_occurrences(
                     new_transcripts, surface_forms
                 ).localCheckpoint(eager=False)
-            if new_occ.count() >= int(
+                n_new = new_occ.count()
+            if n_new >= int(
                 self.cfg.extra.get("range_partition_min_rows", 1_000_000)
             ):
                 new_occ = new_occ.repartitionByRange("conv_id", "turn_idx")
@@ -647,30 +693,14 @@ class Pipeline:
             prior_freq = m_tbl.read().select(
                 "mention_id", "mention_id2", F.col("freq").alias("freq_prior")
             )
-            with _job_description(
-                self.spark.sparkContext, "fold: dim delta agg + freq merge"
-            ):
-                merged_dim = (
-                    delta_dim.join(
-                        prior_freq, ["mention_id", "mention_id2"], "left"
-                    )
-                    .withColumn(
-                        "freq",
-                        F.col("freq")
-                        + F.coalesce(F.col("freq_prior"), F.lit(0)),
-                    )
-                    .drop("freq_prior")
-                    # O(dim) rows — pin them: merge_upsert consumes its
-                    # delta TWICE (affected-bucket collect, then the
-                    # bucketed write), and without the checkpoint each pass
-                    # re-plans and re-runs the salted-agg + dim-join chain
-                    # (~half the 1% fold's fixed latency in the event-log
-                    # profile, r5 verdict #3).  LAZY (r7): merge_upsert's
-                    # affected-bucket collect is the first action through
-                    # it and materializes the cache — eager cost one extra
-                    # job per fold.
-                    .localCheckpoint(eager=False)
+            merged_dim = (
+                delta_dim.join(prior_freq, ["mention_id", "mention_id2"], "left")
+                .withColumn(
+                    "freq",
+                    F.col("freq") + F.coalesce(F.col("freq_prior"), F.lit(0)),
                 )
+                .drop("freq_prior")
+            )
             m_snap = m_tbl.merge_upsert(
                 merged_dim,
                 keys=["mention_id", "mention_id2"],
