@@ -98,11 +98,9 @@ def run_kg_bench(
             "file-backed index path or raise SPARK_GRAFT_BENCH_VOCAB_MAX_ROWS"
         )
     t_vocab, vocab_pdf = timed(vocab_df.toPandas)
-    # production-path index: file-backed shards, loaded executor-side
+    # production-path index: parquet files, loaded executor-side
     idx_path = os.path.join(out_dir, "vocab_index")
-    t_idx, _ = timed(
-        lambda: build_vocab_index_files(vocab_df, idx_path, n_shards=4)
-    )
+    t_idx, idx_dirs = timed(lambda: build_vocab_index_files(vocab_df, idx_path))
 
     transcripts = spark.read.parquet(transcripts_path)
 
@@ -143,7 +141,7 @@ def run_kg_bench(
 
     def extract_link_fileidx():
         return _chain(
-            lambda m: link_mentions_file_index(spark, m, idx_path), "_fileidx"
+            lambda m: link_mentions_file_index(spark, m, idx_dirs), "_fileidx"
         )
 
     # One untimed full pass first (parquet page cache + JIT + codegen), then

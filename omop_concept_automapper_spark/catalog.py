@@ -371,7 +371,9 @@ class Table:
         ``colocate=True`` repartitions on the bucket column first so each
         bucket lands in ONE task and one file — right for the delta-merge
         path, whose write is O(touched buckets) small and otherwise pays
-        tasks×buckets tiny files and a task per shuffle partition.  Full
+        tasks×buckets tiny files.  The shuffle takes no partition count, so
+        AQE coalesces the partitions a small delta leaves nearly empty
+        instead of running one task per bucket.  Full
         rewrites (overwrite / compact / delete / bucketing conversion)
         keep the upstream layout: capping a whole-table rewrite at
         n_buckets tasks would serialize the big case the bucket map
@@ -382,7 +384,7 @@ class Table:
         data_dir = os.path.join(self.path, _DATA, sid)
         out = df.withColumn("__bucket", self._bucket_col(spec))
         if colocate:
-            out = out.repartition(spec["n_buckets"], "__bucket")
+            out = out.repartition("__bucket")
         with _job_description(
             self.spark.sparkContext,
             f"table-write-bucketed {os.path.basename(self.path)}",

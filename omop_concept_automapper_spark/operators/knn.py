@@ -36,13 +36,12 @@ every core without changing a single output row.
 from __future__ import annotations
 
 import glob
-import hashlib
-import json
 import os
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,45 +67,57 @@ _LINK_COLUMNS = [
 ]
 
 
-def build_vocab_index(vocab_pdf: pd.DataFrame) -> dict:
-    """Build the broadcastable index from the vocab_embeddings table
-    (columns: concept_id, concept_name, domain_id, atc7_codes, vector).
+_INDEX_COLUMNS = ["concept_id", "concept_name", "domain_id", "atc7_codes", "vector"]
+# optional metadata columns (interactive search filters, lifecycle 3.3)
+_EXTRA_COLUMNS = ["vocabulary_id", "concept_class_id", "concept_code"]
+
+
+def build_vocab_index(vocab: pa.Table | pd.DataFrame) -> dict:
+    """Build the linker's index from vocab_embeddings rows (columns:
+    concept_id, concept_name, domain_id, atc7_codes, vector), given as an
+    Arrow table or a pandas frame.
 
     Rows are sorted by concept_id so every executor sees the identical
-    layout (deterministic tie-breaks).
+    layout (deterministic tie-breaks).  The matrix is read straight from
+    the Arrow list buffer, not one array per row.
     """
-    pdf = vocab_pdf.sort_values("concept_id").reset_index(drop=True)
-    if len(pdf) >= (1 << _IDX_BITS):
+    if isinstance(vocab, pd.DataFrame):
+        cols = [c for c in _INDEX_COLUMNS + _EXTRA_COLUMNS if c in vocab.columns]
+        vocab = pa.Table.from_pandas(vocab[cols], preserve_index=False)
+    tbl = vocab.sort_by("concept_id")
+    n = tbl.num_rows
+    if n >= (1 << _IDX_BITS):
         # _order_keys packs the column index into _IDX_BITS low bits; beyond
         # that the composite keys overlap and top-k ordering silently
         # corrupts — fail loudly instead (full OMOP is ~4M, headroom 4x).
         raise ValueError(
-            f"vocabulary has {len(pdf)} rows, exceeding the 2^{_IDX_BITS} "
+            f"vocabulary has {n} rows, exceeding the 2^{_IDX_BITS} "
             "composite-key index capacity; widen _IDX_BITS before indexing"
         )
-    matrix = np.asarray([np.asarray(v, dtype=np.float32) for v in pdf["vector"]])
+    vectors = tbl.column("vector").combine_chunks()
+    matrix = vectors.flatten().to_numpy().reshape(n, -1).astype(np.float32)
     # L2-normalize defensively; cosine == dot on unit rows
     norms = np.linalg.norm(matrix, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     matrix = (matrix / norms).astype(np.float32)
 
+    atc7_codes = [c or [] for c in tbl.column("atc7_codes").to_pylist()]
     atc7_inverted: dict[str, list[int]] = {}
-    for i, codes in enumerate(pdf["atc7_codes"]):
-        for code in codes if codes is not None else []:
+    for i, codes in enumerate(atc7_codes):
+        for code in codes:
             atc7_inverted.setdefault(code, []).append(i)
 
     index = {
         "matrix": matrix,
-        "concept_id": pdf["concept_id"].to_numpy(np.int64),
-        "concept_name": pdf["concept_name"].to_numpy(object),
-        "domain_id": pdf["domain_id"].to_numpy(object),
-        "atc7_codes": [list(c) if c is not None else [] for c in pdf["atc7_codes"]],
+        "concept_id": tbl.column("concept_id").to_numpy().astype(np.int64),
+        "concept_name": tbl.column("concept_name").to_numpy(),
+        "domain_id": tbl.column("domain_id").to_numpy(),
+        "atc7_codes": atc7_codes,
         "atc7_inverted": {k: np.asarray(v) for k, v in atc7_inverted.items()},
     }
-    # optional metadata columns (interactive search filters, lifecycle 3.3)
-    for extra in ("vocabulary_id", "concept_class_id", "concept_code"):
-        if extra in pdf.columns:
-            index[extra] = pdf[extra].to_numpy(object)
+    for extra in _EXTRA_COLUMNS:
+        if extra in tbl.column_names:
+            index[extra] = tbl.column(extra).to_numpy()
     return index
 
 
@@ -435,181 +446,47 @@ def link_batch(
 # The in-memory path (link_mentions(vocab_pdf=...)) requires the DRIVER to
 # hold the whole embedding matrix in pandas before broadcasting — at full
 # OMOP (~4M x 1024 fp32 ≈ 16 GB) that kills the driver before any shard
-# helps.  Here the index is written as block-aligned parquet shards by
-# Spark executors (distributed write, partitionBy(shard)); link tasks load
-# their shards lazily from storage inside the UDF with a per-process cache.
-# Driver peak memory is O(n_ids) — the sorted concept_id list used to place
-# block-aligned shard boundaries — never O(n x d).
+# helps.  Here link tasks read the index columns from parquet files inside
+# the UDF, with a per-process cache; the driver never holds a vector.  The
+# files are the vocab_embeddings table's own data dirs (written once, never
+# changed), or, for any other vocab frame, one copy written by
+# :func:`build_vocab_index_files`.
 #
-# Exactness: shards follow the same global concept_id order the in-memory
-# path uses, and ranking uses per-pair scores that no gemm shape affects,
-# so results equal the single-broadcast plan's row for row
+# Exactness: the loader builds the index with the same
+# :func:`build_vocab_index` the broadcast path uses, so results equal the
+# single-broadcast plan's row for row
 # (tests/test_operators.py::test_file_index_exact_equality).
 # ---------------------------------------------------------------------------
 
-_META_COLUMNS = ["concept_id", "concept_name", "domain_id", "atc7_codes"]
-_FILE_INDEX_CACHE: dict[str, dict] = {}
+_FILE_INDEX_CACHE: dict[tuple[str, ...], dict] = {}
 
 
-def vocab_content_key(vocab: DataFrame) -> str:
-    """Order-independent content fingerprint of a vocab index input: row
-    count + bit-XOR of per-row xxhash64 over every indexed column (XOR makes
-    the aggregate partition-layout independent).  One small dimension-table
-    job; used to decide whether an index rebuild would be content-identical.
-    """
-    cols = [c for c in vocab.columns]
-    row = vocab.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.expr(f"bit_xor(xxhash64({', '.join(cols)}))"), F.lit(0)
-        ).alias("h"),
-    ).collect()[0]
-    return f"{int(row['n'])}:{int(row['h'])}"
+def build_vocab_index_files(vocab: DataFrame, path: str) -> list[str]:
+    """Write the index columns of ``vocab`` to ``path`` as parquet, in one
+    job; returns the dirs to hand to :func:`link_mentions_file_index`.
+    Vectors never pass through the driver."""
+    vocab.select(*_INDEX_COLUMNS).write.mode("overwrite").parquet(path)
+    return [path]
 
 
-def build_vocab_index_files(
-    vocab: DataFrame,
-    path: str,
-    n_shards: int = 4,
-    block_rows: int = 65536,
-    content_key: str | None = None,
-) -> dict:
-    """Write the vocab index as parquet files; returns the manifest.
-
-    Layout: ``meta/`` (metadata columns), ``vectors/shard=i/`` (concept_id +
-    vector, one block-aligned slice of the concept_id-sorted matrix per
-    shard), ``manifest.json`` (row offsets per shard).  Vectors never pass
-    through the driver — executors write their own shard partitions.
-
-    The manifest carries a CONTENT key (``content_key`` argument, or a
-    computed :func:`vocab_content_key` when omitted) rather than a per-build
-    uuid (r3 verdict defect: a fresh uuid per rebuild invalidated every
-    executor's shard cache even for content-identical rebuilds, so e.g.
-    every benchmark repeat re-read the whole index from storage).  A rebuild
-    whose content key matches the existing manifest is a NO-OP returning the
-    recorded manifest: identical bytes on disk, executor caches stay warm.
-    """
-    if content_key is None:
-        content_key = vocab_content_key(vocab)
-    manifest_path = os.path.join(path, "manifest.json")
-    if os.path.exists(manifest_path):
-        try:
-            with open(manifest_path) as f:
-                existing = json.load(f)
-        except (OSError, ValueError):
-            existing = None
-        if existing is not None and existing.get("content_key") == content_key:
-            return existing
-    try:
-        ids_tbl = vocab.select("concept_id").orderBy("concept_id").toArrow()
-        ids = ids_tbl.column("concept_id").to_numpy()
-    except AttributeError:  # Spark < 4.0 fallback
-        ids = (
-            vocab.select("concept_id").orderBy("concept_id").toPandas()
-        )["concept_id"].to_numpy()
-    n = int(ids.size)
-    if n >= (1 << _IDX_BITS):
-        raise ValueError(
-            f"vocabulary has {n} rows, exceeding the 2^{_IDX_BITS} "
-            "composite-key index capacity; widen _IDX_BITS before indexing"
-        )
-    n_blocks = -(-n // block_rows) if n else 1
-    eff_shards = max(1, min(n_shards, n_blocks))
-    rows_per_shard = (-(-n_blocks // eff_shards)) * block_rows
-    offsets = list(range(0, max(n, 1), rows_per_shard))
-    # boundary concept ids for the CASE-chain shard assignment (no sampling
-    # nondeterminism, unlike repartitionByRange)
-    boundary_ids = [int(ids[o]) for o in offsets[1:] if o < n]
-
-    shard_expr = F.lit(0)
-    for b in boundary_ids:
-        shard_expr = shard_expr + F.when(F.col("concept_id") >= b, 1).otherwise(0)
-    (
-        vocab.select("concept_id", "vector", shard_expr.alias("shard"))
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(os.path.join(path, "vectors"))
-    )
-    meta_cols = [c for c in vocab.columns if c != "vector"]
-    vocab.select(*meta_cols).write.mode("overwrite").parquet(
-        os.path.join(path, "meta")
-    )
-    manifest = {
-        "n": n,
-        "dim": None,  # filled lazily by the loader
-        "block_rows": block_rows,
-        "offsets": [o for o in offsets if o < n] or [0],
-        "n_shards": eff_shards,
-        # content identity, NOT a per-build uuid: identical input -> byte-
-        # identical manifest -> the loader's content-hash cache key is a HIT
-        # across rebuilds; any data change flips the key and invalidates
-        "content_key": content_key,
-    }
-    with open(os.path.join(path, "manifest.json"), "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-    return manifest
-
-
-def _read_parquet_dir(path: str) -> pd.DataFrame:
+def load_vocab_index_files(dirs: list[str]) -> dict:
+    """Executor-side loader with a per-process cache: the index columns of
+    every parquet file under ``dirs``, read with pyarrow and indexed by
+    :func:`build_vocab_index`.  The cache keys on the sorted file names:
+    every Spark write names its files afresh, so a rewrite reloads while
+    a file whose mtime alone changed (an object-store copy) does not."""
     import pyarrow.parquet as pq
 
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    files = sorted(f for d in dirs for f in glob.glob(os.path.join(d, "*.parquet")))
     if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    return pq.ParquetDataset(files).read().to_pandas()
-
-
-def load_vocab_index_files(path: str) -> dict:
-    """Executor-side loader with a per-process cache: reconstructs the exact
-    index dict (metadata arrays + block-aligned matrix shards) from the
-    files written by ``build_vocab_index_files``."""
-    manifest_path = os.path.join(path, "manifest.json")
-    # key on the manifest CONTENT (carries the data's content_key), not
-    # mtime: object stores don't guarantee useful mtimes, and a same-content
-    # rewrite/rebuild must NOT invalidate the cache while a rebuild over
-    # changed data (new content_key) must
-    with open(manifest_path, "rb") as f:
-        manifest_bytes = f.read()
-    cache_key = f"{path}@{hashlib.blake2b(manifest_bytes, digest_size=16).hexdigest()}"
-    cached = _FILE_INDEX_CACHE.get(cache_key)
+        raise FileNotFoundError(f"no parquet files under {dirs}")
+    key = tuple(files)
+    cached = _FILE_INDEX_CACHE.get(key)
     if cached is not None:
         return cached
-    manifest = json.loads(manifest_bytes)
-    meta = _read_parquet_dir(os.path.join(path, "meta"))
-    meta = meta.sort_values("concept_id").reset_index(drop=True)
-
-    atc7_inverted: dict[str, list[int]] = {}
-    for i, codes in enumerate(meta["atc7_codes"]):
-        for code in codes if codes is not None else []:
-            atc7_inverted.setdefault(code, []).append(i)
-
-    shards: list[tuple[int, np.ndarray]] = []
-    for shard_i, offset in enumerate(manifest["offsets"]):
-        pdf = _read_parquet_dir(
-            os.path.join(path, "vectors", f"shard={shard_i}")
-        ).sort_values("concept_id")
-        matrix = np.asarray(
-            [np.asarray(v, dtype=np.float32) for v in pdf["vector"]]
-        )
-        norms = np.linalg.norm(matrix, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        shards.append((int(offset), (matrix / norms).astype(np.float32)))
-
-    index = {
-        "shards": shards,
-        "concept_id": meta["concept_id"].to_numpy(np.int64),
-        "concept_name": meta["concept_name"].to_numpy(object),
-        "domain_id": meta["domain_id"].to_numpy(object),
-        "atc7_codes": [
-            list(c) if c is not None else [] for c in meta["atc7_codes"]
-        ],
-        "atc7_inverted": {k: np.asarray(v) for k, v in atc7_inverted.items()},
-    }
-    for extra in ("vocabulary_id", "concept_class_id", "concept_code"):
-        if extra in meta.columns:
-            index[extra] = meta[extra].to_numpy(object)
+    index = build_vocab_index(pq.ParquetDataset(files).read(columns=_INDEX_COLUMNS))
     _FILE_INDEX_CACHE.clear()  # one live index per process is enough
-    _FILE_INDEX_CACHE[cache_key] = index
+    _FILE_INDEX_CACHE[key] = index
     return index
 
 
@@ -639,7 +516,7 @@ def _link_partitions(mentions: DataFrame) -> int:
 def link_mentions_file_index(
     spark: SparkSession,
     mentions: DataFrame,
-    index_path: str,
+    index_dirs: list[str],
     k_standard: int = 15,
     k_drug: int = 30,
     target_domains: list[str] | None = None,
@@ -650,9 +527,12 @@ def link_mentions_file_index(
 ) -> DataFrame:
     """Distributed retrieve+rerank against a file-backed vocab index.
 
-    No broadcast, no driver-resident matrix: each executor process loads
-    the shard files once (cache above) from shared storage — the shape a
-    16 GB full-OMOP index needs on a 1000-executor cluster.  The input is
+    ``index_dirs`` hold the index columns: a
+    vocab_embeddings snapshot's ``live_dirs`` or the output of
+    :func:`build_vocab_index_files`.  No broadcast, no driver-resident
+    matrix: each executor process loads the files once (cache above) from
+    shared storage — the shape a 16 GB full-OMOP index needs on a
+    1000-executor cluster.  The input is
     spread round-robin over max(input partitions, default parallelism)
     partitions (``_link_partitions``) before the one ``mapInPandas``, so a
     small mention table still links on every core; since results are
@@ -661,12 +541,13 @@ def link_mentions_file_index(
     (see ``link_batch``); callables must be picklable.
     """
     domains = list(target_domains) if target_domains else None
+    dirs = list(index_dirs)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = None  # loaded on the first batch: a small input leaves tasks empty
         for pdf in batches:
             if idx is None:
-                idx = load_vocab_index_files(index_path)
+                idx = load_vocab_index_files(dirs)
             yield link_batch(
                 pdf, idx, k_standard=k_standard, k_drug=k_drug,
                 target_domains=domains, block_rows=block_rows,

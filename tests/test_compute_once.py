@@ -1,7 +1,9 @@
 """Each intermediate of a build and a fold is computed once: the mention
 detector runs once per turn, a bucketed merge evaluates its delta once
-(and probes nothing on a first write), the vocabulary is hashed once per
-vocab snapshot, and every job a fold starts carries a description."""
+(and probes nothing on a first write) and writes only the buckets it
+touches, the vocabulary is hashed once per vocab snapshot and is never
+copied into a second index layout, and every job a fold starts carries a
+description."""
 
 from __future__ import annotations
 
@@ -119,6 +121,79 @@ def test_bucketed_merge_evaluates_its_delta_once(spark, tmp_path):
     got = {r["k"]: r["v"] for r in tbl.read().collect()}
     assert len(got) == 202
     assert got[3] == "w3" and got[501] == "w501" and got[7] == "v7"
+
+
+def _write_stage_tasks(spark, group: str) -> list[int]:
+    """Tasks of the final (result) stage of each job in ``group``."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    out = []
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        if not store.job(jid).description().get().startswith("table-write"):
+            continue
+        last = max(conv.asJava(store.job(jid).stageIds()))
+        out.append(store.lastStageAttempt(last).numTasks())
+    return out
+
+
+def test_bucketed_merge_writes_one_file_per_touched_bucket(spark, tmp_path):
+    """A delta touching k of n buckets writes k files, one per bucket, and
+    its write stage runs fewer than n tasks: the bucket shuffle has no
+    fixed partition count, so AQE coalesces the empty partitions."""
+    import glob
+
+    n = 16
+    tbl = Table(spark, str(tmp_path / "t"))
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(400)], "k long, v string")
+    tbl.merge_upsert(base, ["k"], bucket_by=("k", n))
+    delta = spark.createDataFrame([(3, "w3"), (401, "w401")], "k long, v string")
+    touched = _bucket_ids(delta, "k", n)
+    assert len(touched) < n
+    _jobs_in_group(spark, "merge-k-buckets", lambda: tbl.merge_upsert(delta, ["k"]))
+    snap = tbl.snapshot()
+    data_dir = os.path.join(tbl.path, "data", snap.snapshot_id)
+    files = glob.glob(os.path.join(data_dir, "__bucket=*", "*.parquet"))
+    assert sorted(os.path.basename(os.path.dirname(f)) for f in files) == sorted(
+        f"__bucket={b}" for b in touched
+    )
+    tasks = _write_stage_tasks(spark, "merge-k-buckets")
+    assert tasks and all(t < n for t in tasks), tasks
+    got = {r["k"]: r["v"] for r in tbl.read().collect()}
+    assert len(got) == 401 and got[3] == "w3" and got[401] == "w401"
+
+
+def test_links_read_the_vocab_table_without_an_index_copy(spark, tmp_path):
+    """A build links straight from the vocab_embeddings snapshot's data
+    dirs: no ``links: vocab index`` job, no ``vocab_index`` dir.  A vocab
+    frame that is not the one the vocab stage returned is written out in
+    exactly one job, and links the same rows."""
+    lexicon = build_lexicon()
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = Pipeline(spark, wh, PipelineConfig())
+    convs = transcripts_dataframe(spark, n_conversations=20)
+    build = _jobs_in_group(
+        spark, "no-index-build", lambda: pipe.run(convs, *vocab_dataframes(spark), lexicon)
+    )
+    assert "links: vocab digest" in build
+    assert "links: vocab index" not in build, build
+    assert not os.path.exists(os.path.join(wh.root, "vocab_index"))
+    links = sorted(map(tuple, wh.table("links").read().collect()))
+    assert links
+
+    wh.reset_stage("links")
+    wh.table("links").drop()
+    foreign = wh.table("vocab_embeddings").read()
+    descs = _jobs_in_group(
+        spark,
+        "foreign-vocab-links",
+        lambda: pipe.stage_links(wh.table("mentions").read(), foreign),
+    )
+    assert descs.count("links: vocab index") == 1, descs
+    assert os.path.isdir(os.path.join(wh.root, "vocab_index"))
+    assert sorted(map(tuple, wh.table("links").read().collect())) == links
 
 
 def test_repeated_lexicon_form_gives_one_mention_row(spark):

@@ -130,6 +130,39 @@ def test_streaming_wiring_lives_in_the_fold_driver():
             assert name not in wiring, f"{path.name}:{node.lineno} uses {name}"
 
 
+def test_benchmark_patch_targets_exist():
+    """``perfbench/workloads.py::pipeline_patches`` wraps runner globals,
+    ``Pipeline`` stages and catalog methods by name; a name the program no
+    longer defines would crash every traced benchmark run."""
+    from omop_concept_automapper_spark import catalog
+    from omop_concept_automapper_spark.plans import runner
+
+    src = (Path(entry_mod.__file__).parent / "perfbench/workloads.py").read_text()
+    fn = next(
+        n for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.FunctionDef) and n.name == "pipeline_patches"
+    )
+    owners = {"catalog.Table": catalog.Table, "catalog.Warehouse": catalog.Warehouse}
+    looked_up = {"runner": [], "runner.Pipeline": [], **{k: [] for k in owners}}
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Assign) and isinstance(node.value, ast.Dict):
+            # layer_fns: runner global name -> span prefix
+            looked_up["runner"] += [k.value for k in node.value.keys]
+        elif isinstance(node, ast.For) and isinstance(node.iter, ast.List):
+            elts = node.iter.elts
+            if all(isinstance(e, ast.Constant) for e in elts):
+                looked_up["runner.Pipeline"] += [e.value for e in elts]
+            for e in elts:
+                if isinstance(e, ast.Tuple):
+                    owner = ast.unparse(e.elts[0])
+                    looked_up[owner].append(e.elts[1].value)
+    homes = {"runner": runner, "runner.Pipeline": runner.Pipeline, **owners}
+    for owner, names in looked_up.items():
+        assert names, f"no {owner} lookups found: pipeline_patches changed shape"
+        missing = [n for n in names if n not in vars(homes[owner])]
+        assert not missing, f"{owner} lacks {missing}"
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -4,11 +4,16 @@ fallback, ATC7 regex, mention detection."""
 
 from __future__ import annotations
 
+import importlib.util
+import random
+from pathlib import Path
+
 import numpy as np
 import pytest
 
 from omop_concept_automapper_spark.functions.embedder import (
     EMBED_DIM,
+    _code_hash,
     embed_one,
     embed_texts,
 )
@@ -47,6 +52,50 @@ class TestEmbedder:
 
     def test_empty_is_zero_vector(self):
         assert float(np.abs(embed_one("")).sum()) == 0.0
+
+    def test_batch_equals_one_at_a_time_bit_for_bit(self):
+        """``embed_texts`` rows are ``embed_one`` byte for byte: random
+        Unicode (lone surrogates included), None, numbers, empty and
+        whitespace-only text, and the benchmark's wide vocabulary names.
+        A padded empty string, an unpadded blank one or a float32 sum would
+        each change some row's bytes."""
+        spec = importlib.util.spec_from_file_location(
+            "perfbench_gen", Path(__file__).parents[1] / "perfbench" / "gen.py"
+        )
+        gen = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(gen)
+        rng = random.Random(13)
+        planes = [(32, 126), (0x80, 0x7FF), (0xD800, 0xDFFF), (0x800, 0x10FFFF)]
+
+        def rand_text():
+            return "".join(
+                chr(rng.randint(*rng.choice(planes)))
+                for _ in range(rng.randint(0, 24))
+            )
+
+        texts = [rand_text() for _ in range(2000)]
+        texts += [None, 0, 7, -12, 3.25, "", " ", "  \t ", "A", "ab", "abc"]
+        texts += [r[1] for r in gen.wide_vocabulary(1, 8000)]
+        rng.shuffle(texts)
+        as_text = [
+            t if isinstance(t, str) else ("" if t is None else str(t))
+            for t in texts
+        ]
+        want = np.stack([embed_one(t) for t in as_text])
+        assert embed_texts(texts).tobytes() == want.tobytes()
+        # batch composition does not matter either
+        assert embed_texts(texts[:7]).tobytes() == want[:7].tobytes()
+        assert embed_texts([]).shape == (0, EMBED_DIM)
+
+    def test_ngram_cache_stays_bounded(self):
+        rng = random.Random(5)
+        alphabet = [chr(c) for c in range(33, 127)]  # ~830k distinct 3-grams
+        texts = ["".join(rng.choices(alphabet, k=40)) for _ in range(4000)]
+        embed_texts(texts)
+        info = _code_hash.cache_info()
+        assert info.maxsize == 1 << 16
+        assert info.misses > info.maxsize  # the batch outgrew the cache...
+        assert info.currsize <= info.maxsize  # ...which stayed in bounds
 
 
 class TestReranker:

@@ -372,23 +372,38 @@ def test_incremental_vocab_embedding_resume(spark, tmp_path):
     assert full.select("concept_id").distinct().count() == n2
 
 
+def _spy_link_index_dirs(monkeypatch) -> list[list[str]]:
+    """Record the index dirs of every ``link_mentions_file_index`` call the
+    runner makes; the calls still link."""
+    from omop_concept_automapper_spark.plans import runner
+
+    calls: list[list[str]] = []
+    real = runner.link_mentions_file_index
+
+    def spy(spark, mentions, index_dirs, **kwargs):
+        calls.append(list(index_dirs))
+        return real(spark, mentions, index_dirs, **kwargs)
+
+    monkeypatch.setattr(runner, "link_mentions_file_index", spy)
+    return calls
+
+
 def test_embedder_version_bump_reembeds_and_rebuilds_index(spark, tmp_path, monkeypatch):
     """A bumped EMBEDDER_VERSION must (a) bypass the stage-complete
     short-circuit and the already-embedded resume, re-embedding EVERY
-    concept via an overwrite, and (b) change the vocab-index content key so
-    the no-op build check rebuilds instead of serving old-version vectors
-    (r5 self-review finding #1)."""
-    import json as _json
+    concept via an overwrite, and (b) relink against the NEW snapshot's
+    data dirs, none of which held old-version vectors (r5 self-review
+    finding #1)."""
     import os as _os
 
+    calls = _spy_link_index_dirs(monkeypatch)
     wh_path = str(tmp_path / "wh")
     wh, _ = _run(spark, wh_path)
     tbl = wh.table("vocab_embeddings")
     n1 = tbl.read().count()
     assert Pipeline._recorded_embedder_version(tbl) is not None
-    man_path = _os.path.join(wh.root, "vocab_index", "manifest.json")
-    with open(man_path) as f:
-        key1 = _json.load(f)["content_key"]
+    dirs1 = tbl.snapshot().live_dirs
+    assert calls == [dirs1]
 
     monkeypatch.setattr(
         "omop_concept_automapper_spark.plans.runner.EMBEDDER_VERSION", 999
@@ -400,10 +415,11 @@ def test_embedder_version_bump_reembeds_and_rebuilds_index(spark, tmp_path, monk
     assert tbl2.history()[-1].operation == "overwrite"
     assert tbl2.read().count() == n1
     assert tbl2.read().select("concept_id").distinct().count() == n1
-    # index content key rotated -> the build was NOT a no-op
-    with open(man_path) as f:
-        key2 = _json.load(f)["content_key"]
-    assert key2 != key1 and key2.endswith(":e999")
+    # the relink loaded the new snapshot's dirs, disjoint from the old ones
+    dirs2 = tbl2.snapshot().live_dirs
+    assert calls[1:] == [dirs2]
+    assert not set(dirs2) & set(dirs1)
+    assert not _os.path.exists(_os.path.join(wh_path, "vocab_index"))
 
 
 def test_stale_links_recompute_resets_marker_before_compute(
@@ -714,12 +730,13 @@ def test_table_level_metrics_survive_compact_and_expire(spark, tmp_path):
     assert last(tbl, "tokens_through") == 900
 
 
-def test_incremental_fold_is_delta_scoped(spark, tmp_path):
+def test_incremental_fold_is_delta_scoped(spark, tmp_path, monkeypatch):
     """r3 verdict ask #4: a fold's per-batch work is O(delta), not
     O(history) — the mention dim is freq-merged from the appended
-    occurrences only, the vocab index rebuild is a content-keyed no-op,
-    and canonicalization re-runs CC only over components touched by new
-    links (evidenced by the recorded stage/snapshot metrics)."""
+    occurrences only, the fold links against the build's vocab snapshot
+    dirs without writing any index, and canonicalization re-runs CC only
+    over components touched by new links (evidenced by the recorded
+    stage/snapshot metrics)."""
     import os
 
     lexicon = build_lexicon()
@@ -729,18 +746,17 @@ def test_incremental_fold_is_delta_scoped(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = Pipeline(spark, wh, PipelineConfig())
     pipe.run(batch1, *vocab_dataframes(spark), lexicon)
-    manifest_path = os.path.join(wh.root, "vocab_index", "manifest.json")
-    with open(manifest_path) as f:
-        idx_manifest = f.read()
+    vocab_dirs = wh.table("vocab_embeddings").snapshot().live_dirs
+    calls = _spy_link_index_dirs(monkeypatch)
     pipe.run_incremental(batch2, *vocab_dataframes(spark), lexicon)
 
     # the dim update went through the delta freq-merge, never re-scanning
     # the full occurrences table
     assert wh.stage_metrics("mentions")["metrics"]["dim_path"] == "delta"
-    # unchanged vocabulary -> the index rebuild was a byte-identical no-op
-    # (content-keyed manifest; executor shard caches stay warm)
-    with open(manifest_path) as f:
-        assert f.read() == idx_manifest
+    # unchanged vocabulary -> the fold linked from the build's snapshot
+    # dirs (executor index caches stay warm) and wrote no index copy
+    assert calls == [vocab_dirs]
+    assert not os.path.exists(os.path.join(wh.root, "vocab_index"))
     # the graph merge took the delta-scoped path and recorded it
     e_metrics = wh.table("edges").snapshot().metrics
     n_metrics = wh.table("nodes").snapshot().metrics

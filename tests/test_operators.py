@@ -269,10 +269,12 @@ def test_knn_topk_truncates_and_orders():
 
 
 def test_file_index_exact_equality(spark, tmp_path):
-    """The file-backed index (executor-side shard loading, no driver-resident
-    matrix) must produce EXACTLY the in-memory single-broadcast results:
-    shard boundaries are block-aligned over the same concept_id order, so
-    every gemm call is shape-identical."""
+    """The file-backed index (executor-side loading, no driver-resident
+    matrix) must produce EXACTLY the in-memory single-broadcast results,
+    whether it reads a written index copy or a vocab table whose rows are
+    split over several data dirs: the loader builds the index with the
+    broadcast path's own ``build_vocab_index``."""
+    from omop_concept_automapper_spark.catalog import Table
     from omop_concept_automapper_spark.fixtures.transcripts import (
         transcripts_dataframe,
     )
@@ -314,18 +316,25 @@ def test_file_index_exact_equality(spark, tmp_path):
     base = canon(link_mentions(spark, mentions, vocab_pdf, block_rows=32))
     assert base
 
-    idx_path = str(tmp_path / "vocab_index")
-    manifest = build_vocab_index_files(vocab, idx_path, n_shards=3, block_rows=32)
-    assert manifest["n_shards"] == 3
-    got = canon(link_mentions_file_index(spark, mentions, idx_path, block_rows=32))
+    dirs = build_vocab_index_files(vocab, str(tmp_path / "vocab_index"))
+    got = canon(link_mentions_file_index(spark, mentions, dirs, block_rows=32))
+    assert got == base
+
+    # a vocab table appended in two halves: two data dirs, interleaved ids
+    tbl = Table(spark, str(tmp_path / "vocab_embeddings"))
+    tbl.append(vocab.where("concept_id % 2 = 0"))
+    tbl.append(vocab.where("concept_id % 2 = 1"))
+    live = tbl.snapshot().live_dirs
+    assert len(live) == 2
+    got = canon(link_mentions_file_index(spark, mentions, live, block_rows=32))
     assert got == base
 
 
 def test_file_index_cache_keys_on_content_not_mtime(spark, tmp_path):
-    """Object-store safety: the per-process index cache must key on manifest
-    CONTENT — rewriting the manifest with identical bytes (new mtime) must
-    NOT reload; a content change (new content_key in the manifest) must."""
-    import json
+    """Object-store safety: the per-process index cache keys on the data
+    file names, never on mtimes — touching every file is a cache hit, and
+    a rewrite (Spark names its files afresh) reloads the new content."""
+    import glob
     import os
 
     from omop_concept_automapper_spark.fixtures.vocabulary import (
@@ -343,35 +352,23 @@ def test_file_index_cache_keys_on_content_not_mtime(spark, tmp_path):
         "concept_id", "concept_name", "domain_id", "atc7_codes", "vector"
     )
     idx_path = str(tmp_path / "vocab_index")
-    build_vocab_index_files(vocab, idx_path, n_shards=2, block_rows=32)
-    manifest_path = os.path.join(idx_path, "manifest.json")
+    dirs = build_vocab_index_files(vocab, idx_path)
+    idx1 = load_vocab_index_files(dirs)
+    n = idx1["concept_id"].size
+    assert n == vocab.count()
 
-    idx1 = load_vocab_index_files(idx_path)
-    # same-content rewrite: mtime changes, content doesn't -> cache hit
-    with open(manifest_path) as f:
-        content = f.read()
-    os.utime(manifest_path, None)
-    with open(manifest_path, "w") as f:
-        f.write(content)
-    assert load_vocab_index_files(idx_path) is idx1
+    # mtime-only change -> cache hit
+    for f in glob.glob(os.path.join(idx_path, "*.parquet")):
+        st = os.stat(f)
+        os.utime(f, (st.st_atime + 100, st.st_mtime + 100))
+    assert load_vocab_index_files(dirs) is idx1
 
-    # content change (a rebuild over DIFFERENT data) -> reload
-    m = json.loads(content)
-    m["content_key"] = "0:0"
-    with open(manifest_path, "w") as f:
-        f.write(json.dumps(m, sort_keys=True))
-    assert load_vocab_index_files(idx_path) is not idx1
-
-    # content-identical rebuild (r3 verdict ask #5): building again over the
-    # same data must be a manifest-level NO-OP — byte-identical manifest,
-    # and an executor's cached index stays valid (cache HIT, no reload)
-    with open(manifest_path, "w") as f:
-        f.write(content)
-    idx2 = load_vocab_index_files(idx_path)
-    build_vocab_index_files(vocab, idx_path, n_shards=2, block_rows=32)
-    with open(manifest_path) as f:
-        assert f.read() == content
-    assert load_vocab_index_files(idx_path) is idx2
+    # a rewrite over different rows at the same path -> reload, new content
+    build_vocab_index_files(vocab.where("concept_id % 2 = 0"), idx_path)
+    idx2 = load_vocab_index_files(dirs)
+    assert idx2 is not idx1
+    assert 0 < idx2["concept_id"].size < n
+    assert load_vocab_index_files(dirs) is idx2
 
 
 def test_stage_links_never_collects_vocab_to_driver(spark, tmp_path, monkeypatch):

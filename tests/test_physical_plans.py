@@ -179,8 +179,7 @@ def test_file_index_linker_spreads_over_every_core(spark, tmp_path):
     vocab = build_vocab_embeddings(*vocab_dataframes(spark)).select(
         "concept_id", "concept_name", "domain_id", "atc7_codes", "vector"
     )
-    idx_path = str(tmp_path / "vocab_index")
-    build_vocab_index_files(vocab, idx_path)
+    idx_dirs = build_vocab_index_files(vocab, str(tmp_path / "vocab_index"))
     spark.createDataFrame(
         [(i, 0, f"mention {i}", False, "") for i in range(40)],
         "mention_id long, mention_id2 long, mention_text string, "
@@ -190,7 +189,7 @@ def test_file_index_linker_spreads_over_every_core(spark, tmp_path):
     assert mentions.rdd.getNumPartitions() == 1
 
     lines = plan_str(
-        link_mentions_file_index(spark, mentions, idx_path), mode="simple"
+        link_mentions_file_index(spark, mentions, idx_dirs), mode="simple"
     ).splitlines()
     rr = [i for i, line in enumerate(lines) if "RoundRobinPartitioning" in line]
     assert len(rr) == 1, lines
