@@ -211,8 +211,12 @@ class Table:
     # -------------------------------------------------------------- read
     def read(self, snapshot_id: str | None = None) -> DataFrame:
         snap = self.snapshot(snapshot_id)
-        if snap is None or not snap.live_dirs:
+        if snap is None or not (snap.live_dirs or snap.schema):
             raise FileNotFoundError(f"table {self.path} has no current snapshot")
+        if not snap.live_dirs:
+            # a commit that wrote no rows (a bucketed merge of an empty
+            # delta) is an empty table of its recorded schema
+            return self.spark.createDataFrame([], StructType.fromJson(snap.schema))
         return self._read_dirs(snap.live_dirs, snap.schema)
 
     def _read_dirs(self, dirs: list[str], schema: dict | None) -> DataFrame:

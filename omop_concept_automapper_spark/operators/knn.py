@@ -1,4 +1,4 @@
-"""Broadcast cosine top-k retrieval + rerank — the linker's heart (J9/O4/U-RRK).
+"""Cosine top-k retrieval + rerank — the linker's heart (J9/O4/U-RRK).
 
 Reference semantics reproduced (SURVEY.md §2.3 J9, §2.6 O4, §2.9 U-RRK):
 
@@ -15,22 +15,20 @@ Reference semantics reproduced (SURVEY.md §2.3 J9, §2.6 O4, §2.9 U-RRK):
 * rerank = deterministic scorer over candidate names, 0-indexed selection,
   first-candidate/confidence-1 fallback (reference reranker.py:42-58).
 
-Spark-first design: the vocabulary index is a numpy matrix broadcast to
-executors; scoring is a blocked matrix multiply inside ``mapInPandas``
-(Arrow batches, no per-row Python in the hot loop).  Retrieval and rerank
-happen in the SAME task — no extra shuffle between stages.  At 100 TB /
-full-OMOP scale the matrix (~4M x 1024 float32 ≈ 16 GB) exceeds a single
-broadcast: the top-k kernel scores a fixed chunk of queries against one
-``block_rows`` slice at a time, so working memory is O(chunk × block_rows),
-and the index dict is shard-able (score per shard, union partial top-k,
-re-reduce — exact semantics preserved; tie-break (-score, concept_id) makes
-shard merges order-stable, SURVEY.md hard part (f)).
+Spark-first design: scoring is a blocked matrix multiply inside one
+``mapInPandas`` (Arrow batches, no per-row Python in the hot loop).
+Retrieval and rerank happen in the SAME task — no extra shuffle between
+stages.  The top-k kernel scores a fixed chunk of queries against one
+``block_rows`` slice of the vocabulary matrix at a time, so working memory
+is O(chunk × block_rows).  How the index reaches an executor is a loader
+choice of the one link driver: the vocab table's own files (the full-OMOP
+path) or a broadcast of a small vocab frame.
 
 Batch independence: the gemm only preselects candidates; they are ranked
 and scored by a per-pair dot product, so a mention's candidates, chosen
 concept and score do not depend on which other mentions share its batch.
-That is what lets the file-index linker split its input round-robin over
-every core without changing a single output row.
+That is what lets the link driver split its input round-robin over every
+core without changing a single output row.
 """
 
 from __future__ import annotations
@@ -94,8 +92,9 @@ def build_vocab_index(vocab: pa.Table | pd.DataFrame) -> dict:
             f"vocabulary has {n} rows, exceeding the 2^{_IDX_BITS} "
             "composite-key index capacity; widen _IDX_BITS before indexing"
         )
-    vectors = tbl.column("vector").combine_chunks()
-    matrix = vectors.flatten().to_numpy().reshape(n, -1).astype(np.float32)
+    flat = tbl.column("vector").combine_chunks().flatten().to_numpy()
+    # an empty vocabulary is a (0, 0) matrix: every mention has zero hits
+    matrix = flat.reshape(n, flat.size // max(n, 1)).astype(np.float32)
     # L2-normalize defensively; cosine == dot on unit rows
     norms = np.linalg.norm(matrix, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
@@ -135,8 +134,8 @@ def _order_keys(scores: np.ndarray, col_idx: np.ndarray) -> np.ndarray:
     shifted left, and the complemented column index packed into the low
     bits — so a plain integer max/argpartition realizes the pinned
     (-score, concept_id) tie rule with NO tie ambiguity (keys are unique).
-    This is what makes blocked / sharded top-k merges exact (SURVEY.md hard
-    part (f)).
+    This is what makes blocked top-k merges exact (SURVEY.md hard part
+    (f)).
     """
     b = np.ascontiguousarray(scores, dtype=np.float32).view(np.int32).astype(np.int64)
     mono = np.where(b >= 0, b, np.int64(-2147483648) - b)
@@ -185,22 +184,22 @@ def _merge_topk(
 
 def _blocked_topk(
     q: np.ndarray,
-    shards: list[tuple[int, np.ndarray]],
+    matrix: np.ndarray,
     k: int,
     base_mask: np.ndarray | None,
     block_rows: int,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Exact streaming top-k over a sharded vocabulary matrix.
+    """Exact streaming top-k over the vocabulary matrix.
 
-    ``shards`` is a list of (global_row_offset, matrix_slice).  Queries are
-    scored ``_QUERY_CHUNK`` at a time against one ``block_rows`` slice of a
-    shard at a time, so peak memory is O(chunk × block_rows), never
-    O(batch × vocab).  Per block, the float32 gemm only PRESELECTS: every
-    column scoring at least the row's k-th gemm score minus a rounding
-    margin survives, and survivors are rescored with a per-pair dot product
-    (``_pair_scores``).  Ranking uses the per-pair scores alone, so a row's
-    result does not depend on the other queries in the batch (BLAS rounds
-    the same dot product differently across call shapes).
+    Queries are scored ``_QUERY_CHUNK`` at a time against one
+    ``block_rows`` slice of ``matrix`` at a time, so peak memory is
+    O(chunk × block_rows), never O(batch × vocab).  Per block, the float32
+    gemm only PRESELECTS: every column scoring at least the row's k-th gemm
+    score minus a rounding margin survives, and survivors are rescored with
+    a per-pair dot product (``_pair_scores``).  Ranking uses the per-pair
+    scores alone, so a row's result does not depend on the other queries in
+    the batch (BLAS rounds the same dot product differently across call
+    shapes).
 
     The margin is sound: a float32 gemm score of length d lies within
     (d + 2) u ‖q‖ ‖v‖ of its per-pair rescoring (u = 2^-24), so a column in
@@ -210,79 +209,63 @@ def _blocked_topk(
     lower bound on the k-th gemm score (the k-th largest of >= 8k column
     group maxima), which only admits more survivors.
 
-    Survivor keys are globally unique composite keys, so block and shard
-    merges are EXACT — this is what lets a full-OMOP index (16 GB) ship as
-    several independent broadcasts (SCALE.md).  Returns (keys (n, w) int64
-    sorted desc with w = min(k, vocab), count of valid candidates per row);
-    slots past a row's valid count hold keys <= ``_NEG_INF_KEY``."""
+    Survivor keys are unique composite keys, so block merges are EXACT.
+    Returns (keys (n, w) int64 sorted desc with w = min(k, vocab), count of
+    valid candidates per row); slots past a row's valid count hold keys
+    <= ``_NEG_INF_KEY``."""
     n_q, dim = q.shape
-    width = min(k, sum(m.shape[0] for _, m in shards))
+    n_v = matrix.shape[0]
+    if n_v > (1 << _IDX_BITS):
+        raise ValueError(
+            f"matrix rows reach {n_v} > 2^{_IDX_BITS} composite-key "
+            "capacity; widen _IDX_BITS"
+        )
+    width = min(k, n_v)
     run = np.full((n_q, width), _PAD_KEY, dtype=np.int64)
     q_norm = np.linalg.norm(q.astype(np.float64), axis=1)
     rel_margin = 4.0 * (dim + 2) * _F32_UNIT_ROUNDOFF
     pair_step = max(1, _PAIR_SLICE // max(dim, 1))
-    for offset, matrix in shards:
-        n_v = matrix.shape[0]
-        if offset + n_v > (1 << _IDX_BITS):
-            raise ValueError(
-                f"shard rows reach {offset + n_v} > 2^{_IDX_BITS} composite-key "
-                "capacity; widen _IDX_BITS"
-            )
-        for start in range(0, n_v, block_rows):
-            block = matrix[start : start + block_rows]
-            n_b = block.shape[0]
-            kk = min(width, n_b)
-            if kk == 0:
-                continue
-            masked = None
-            if base_mask is not None:
-                masked = ~base_mask[offset + start : offset + start + n_b]
-            v_max = float(np.sqrt(np.einsum("ij,ij->i", block, block).max()))
-            # >= 8 kk column groups: partitioning their maxima is a fraction
-            # of the cost of partitioning every score
-            group_starts = np.arange(0, n_b, max(1, n_b // (8 * kk)))
-            n_g = group_starts.size
-            margin = (rel_margin * v_max) * q_norm
-            for c0 in range(0, n_q, _QUERY_CHUNK):
-                c1 = min(c0 + _QUERY_CHUNK, n_q)
-                qc = q[c0:c1]
-                s = qc @ block.T
-                if masked is not None:
-                    s[:, masked] = -np.inf
-                # the kk-th largest group maximum is a lower bound on the
-                # kk-th largest score (kk groups reach it); a row with fewer
-                # than kk groups holding a valid column gets -inf, and its
-                # threshold clamps to the lowest finite float, which drops
-                # the masked columns
-                g_max = np.maximum.reduceat(s, group_starts, axis=1)
-                kth = np.partition(g_max, n_g - kk, axis=1)[:, n_g - kk]
-                thr = np.maximum(
-                    kth - margin[c0:c1], np.finfo(np.float32).min
-                ).astype(np.float32)
-                rows, cols = np.nonzero(s >= thr[:, None])
-                del s
-                scores = np.empty(rows.size, dtype=np.float32)
-                for a in range(0, rows.size, pair_step):
-                    b = a + pair_step
-                    scores[a:b] = _pair_scores(qc[rows[a:b]], block[cols[a:b]])
-                keys = _order_keys(scores, cols + np.int64(offset + start))
-                run[c0:c1] = _merge_topk(run[c0:c1], rows, keys)
+    for start in range(0, n_v, block_rows):
+        block = matrix[start : start + block_rows]
+        n_b = block.shape[0]
+        kk = min(width, n_b)
+        if kk == 0:
+            continue
+        masked = None
+        if base_mask is not None:
+            masked = ~base_mask[start : start + n_b]
+        v_max = float(np.sqrt(np.einsum("ij,ij->i", block, block).max()))
+        # >= 8 kk column groups: partitioning their maxima is a fraction
+        # of the cost of partitioning every score
+        group_starts = np.arange(0, n_b, max(1, n_b // (8 * kk)))
+        n_g = group_starts.size
+        margin = (rel_margin * v_max) * q_norm
+        for c0 in range(0, n_q, _QUERY_CHUNK):
+            c1 = min(c0 + _QUERY_CHUNK, n_q)
+            qc = q[c0:c1]
+            s = qc @ block.T
+            if masked is not None:
+                s[:, masked] = -np.inf
+            # the kk-th largest group maximum is a lower bound on the
+            # kk-th largest score (kk groups reach it); a row with fewer
+            # than kk groups holding a valid column gets -inf, and its
+            # threshold clamps to the lowest finite float, which drops
+            # the masked columns
+            g_max = np.maximum.reduceat(s, group_starts, axis=1)
+            kth = np.partition(g_max, n_g - kk, axis=1)[:, n_g - kk]
+            thr = np.maximum(
+                kth - margin[c0:c1], np.finfo(np.float32).min
+            ).astype(np.float32)
+            rows, cols = np.nonzero(s >= thr[:, None])
+            del s
+            scores = np.empty(rows.size, dtype=np.float32)
+            for a in range(0, rows.size, pair_step):
+                b = a + pair_step
+                scores[a:b] = _pair_scores(qc[rows[a:b]], block[cols[a:b]])
+            keys = _order_keys(scores, cols + np.int64(start))
+            run[c0:c1] = _merge_topk(run[c0:c1], rows, keys)
     valid_counts = (run > _NEG_INF_KEY).sum(axis=1)
     return run, valid_counts
-
-
-def _shards_of(index: dict) -> list[tuple[int, np.ndarray]]:
-    return index.get("shards") or [(0, index["matrix"])]
-
-
-def _gather_rows(shards: list[tuple[int, np.ndarray]], idxs: np.ndarray) -> np.ndarray:
-    """Gather matrix rows by GLOBAL index across shards."""
-    out = np.empty((idxs.size, shards[0][1].shape[1]), dtype=shards[0][1].dtype)
-    for offset, matrix in shards:
-        sel = (idxs >= offset) & (idxs < offset + matrix.shape[0])
-        if sel.any():
-            out[sel] = matrix[idxs[sel] - offset]
-    return out
 
 
 def link_batch(
@@ -311,7 +294,7 @@ def link_batch(
         call_with_retry,
     )
 
-    shards = _shards_of(index)
+    matrix = index["matrix"]
     concept_ids = index["concept_id"]
     names = index["concept_name"]
     out_rows: list[tuple] = []
@@ -341,8 +324,7 @@ def link_batch(
         # attempts x sleep) instead of quarantining quickly.  A single
         # per-row success resets the streak (row-specific poison inputs
         # keep degrading gracefully).
-        dim = shards[0][1].shape[1]
-        q = np.zeros((len(texts), dim), dtype=np.float32)
+        q = np.zeros((len(texts), matrix.shape[1]), dtype=np.float32)
         consecutive, max_consecutive = 0, 5
         last_err = None
         for i, t in enumerate(texts):
@@ -368,7 +350,7 @@ def link_batch(
     live = np.ones(len(texts), dtype=bool)
     live[list(embed_errors)] = False
     top_keys, n_valid = _blocked_topk(
-        q[live], shards, max(k_standard, k_drug), base_mask, block_rows
+        q[live], matrix, max(k_standard, k_drug), base_mask, block_rows
     )
     top_idx, top_score = _decode_idx(top_keys), _decode_score(top_keys)
     key_row = np.cumsum(live) - 1
@@ -399,7 +381,7 @@ def link_batch(
                     allowed = allowed[base_mask[allowed]]
                 if allowed is None or allowed.size == 0:
                     continue  # zero hits -> no mapping (auto_mapper.py:76-77)
-                sub_scores = _pair_scores(q[row_i], _gather_rows(shards, allowed))
+                sub_scores = _pair_scores(q[row_i], matrix[allowed])
                 _, sub_top = pinned_topk(sub_scores[None, :], concept_ids[allowed], k)
                 top, top_scores = allowed[sub_top], sub_scores[sub_top]
             else:
@@ -441,20 +423,19 @@ def link_batch(
 
 
 # ---------------------------------------------------------------------------
-# File-backed vocab index: the full-OMOP scale path.
+# The link driver and its two index loaders.
 #
-# The in-memory path (link_mentions(vocab_pdf=...)) requires the DRIVER to
-# hold the whole embedding matrix in pandas before broadcasting — at full
-# OMOP (~4M x 1024 fp32 ≈ 16 GB) that kills the driver before any shard
-# helps.  Here link tasks read the index columns from parquet files inside
-# the UDF, with a per-process cache; the driver never holds a vector.  The
-# files are the vocab_embeddings table's own data dirs (written once, never
+# ``_link`` is the one Spark plan: select, round-robin spread, one
+# ``mapInPandas`` over ``link_batch``.  Where the index comes from is a
+# zero-argument loader run once per task.  The full-OMOP path
+# (:func:`link_mentions_file_index`) has link tasks read the index columns
+# from parquet files, with a per-process cache, so the driver never holds
+# a vector (at full OMOP the matrix is ~4M x 1024 fp32 ≈ 16 GB).  The files
+# are the vocab_embeddings table's own data dirs (written once, never
 # changed), or, for any other vocab frame, one copy written by
-# :func:`build_vocab_index_files`.
-#
-# Exactness: the loader builds the index with the same
-# :func:`build_vocab_index` the broadcast path uses, so results equal the
-# single-broadcast plan's row for row
+# :func:`build_vocab_index_files`.  :func:`link_mentions` broadcasts the
+# index of a small driver-side vocab frame instead.  Both loaders build the
+# index with :func:`build_vocab_index`, so they link row for row alike
 # (tests/test_operators.py::test_file_index_exact_equality).
 # ---------------------------------------------------------------------------
 
@@ -513,6 +494,29 @@ def _link_partitions(mentions: DataFrame) -> int:
     return n
 
 
+def _link(mentions: DataFrame, load_index, *link_args) -> DataFrame:
+    """Retrieve+rerank ``mentions`` in one ``mapInPandas`` over
+    :func:`link_batch`; ``load_index()`` returns the index, and
+    ``link_args`` are ``link_batch``'s parameters after ``index``, in its
+    order.  The input is spread round-robin over max(input partitions,
+    default parallelism) partitions (``_link_partitions``), so a small
+    mention table still links on every core; since results are
+    batch-independent, the split changes no output row."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        index = None  # loaded on the first batch: a small input leaves tasks empty
+        for pdf in batches:
+            if index is None:
+                index = load_index()
+            yield link_batch(pdf, index, *link_args)
+
+    return (
+        _select_link_input(mentions)
+        .repartition(_link_partitions(mentions))
+        .mapInPandas(run, schema=LINK_RESULT_SCHEMA)
+    )
+
+
 def link_mentions_file_index(
     spark: SparkSession,
     mentions: DataFrame,
@@ -527,38 +531,18 @@ def link_mentions_file_index(
 ) -> DataFrame:
     """Distributed retrieve+rerank against a file-backed vocab index.
 
-    ``index_dirs`` hold the index columns: a
-    vocab_embeddings snapshot's ``live_dirs`` or the output of
-    :func:`build_vocab_index_files`.  No broadcast, no driver-resident
-    matrix: each executor process loads the files once (cache above) from
-    shared storage — the shape a 16 GB full-OMOP index needs on a
-    1000-executor cluster.  The input is
-    spread round-robin over max(input partitions, default parallelism)
-    partitions (``_link_partitions``) before the one ``mapInPandas``, so a
-    small mention table still links on every core; since results are
-    batch-independent, the split changes no output row.
+    ``index_dirs`` hold the index columns: a vocab_embeddings snapshot's
+    ``live_dirs`` or the output of :func:`build_vocab_index_files`.  No
+    broadcast, no driver-resident matrix: each executor process loads the
+    files once (cache above) from shared storage — the shape a 16 GB
+    full-OMOP index needs on a 1000-executor cluster.
     ``embed_fn``/``rerank_fn``/``retry_policy`` = the model-endpoint seam
     (see ``link_batch``); callables must be picklable.
     """
-    domains = list(target_domains) if target_domains else None
     dirs = list(index_dirs)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = None  # loaded on the first batch: a small input leaves tasks empty
-        for pdf in batches:
-            if idx is None:
-                idx = load_vocab_index_files(dirs)
-            yield link_batch(
-                pdf, idx, k_standard=k_standard, k_drug=k_drug,
-                target_domains=domains, block_rows=block_rows,
-                embed_fn=embed_fn, rerank_fn=rerank_fn,
-                retry_policy=retry_policy,
-            )
-
-    return (
-        _select_link_input(mentions)
-        .repartition(_link_partitions(mentions))
-        .mapInPandas(run, schema=LINK_RESULT_SCHEMA)
+    return _link(
+        mentions, lambda: load_vocab_index_files(dirs), k_standard, k_drug,
+        target_domains, block_rows, embed_fn, rerank_fn, retry_policy,
     )
 
 
@@ -569,56 +553,16 @@ def link_mentions(
     k_standard: int = 15,
     k_drug: int = 30,
     target_domains: list[str] | None = None,
-    n_shards: int = 1,
     block_rows: int = 65536,
     embed_fn=None,
     rerank_fn=None,
     retry_policy=None,
 ) -> DataFrame:
-    """Distributed retrieve+rerank: one ``mapInPandas`` pass over mentions.
-
-    ``n_shards > 1`` ships the embedding matrix as that many independent
-    broadcasts (the full-OMOP path where one 16 GB broadcast is
-    impractical); shard boundaries are aligned to ``block_rows`` multiples.
-    BLAS results can differ at the last ulp across matrix shapes, but the
-    kernel ranks by per-pair scores, so results are EXACTLY equal to the
-    single-broadcast plan
-    (tests/test_operators.py::test_sharded_index_exact_equality).
-    """
-    index = build_vocab_index(vocab_pdf)
-    domains = list(target_domains) if target_domains else None
-    sc = spark.sparkContext
-
-    if n_shards <= 1:
-        meta_bc, shard_bcs = sc.broadcast(index), []
-    else:
-        matrix = index.pop("matrix")
-        n = matrix.shape[0]
-        # shard bounds MUST be block_rows multiples (exactness invariant);
-        # a vocab smaller than n_shards * block_rows gets fewer shards —
-        # sharding exists for vocabularies with many blocks.
-        n_blocks = -(-n // block_rows)
-        eff_shards = min(n_shards, n_blocks)
-        blocks_per_shard = -(-n_blocks // eff_shards)
-        bounds = list(range(0, n, blocks_per_shard * block_rows)) + [n]
-        shard_bcs = [
-            sc.broadcast((int(a), np.ascontiguousarray(matrix[a:b])))
-            for a, b in zip(bounds[:-1], bounds[1:])
-            if b > a
-        ]
-        meta_bc = sc.broadcast(index)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = meta_bc.value
-        if shard_bcs:
-            idx = dict(idx)
-            idx["shards"] = [b.value for b in shard_bcs]
-        for pdf in batches:
-            yield link_batch(
-                pdf, idx, k_standard=k_standard, k_drug=k_drug,
-                target_domains=domains, block_rows=block_rows,
-                embed_fn=embed_fn, rerank_fn=rerank_fn,
-                retry_policy=retry_policy,
-            )
-
-    return _select_link_input(mentions).mapInPandas(run, schema=LINK_RESULT_SCHEMA)
+    """Distributed retrieve+rerank against a driver-side vocab frame: its
+    index is broadcast, otherwise the plan is
+    :func:`link_mentions_file_index`'s."""
+    bc = spark.sparkContext.broadcast(build_vocab_index(vocab_pdf))
+    return _link(
+        mentions, lambda: bc.value, k_standard, k_drug,
+        target_domains, block_rows, embed_fn, rerank_fn, retry_policy,
+    )

@@ -12,7 +12,7 @@ Stage graph (SURVEY.md §3.1 re-expression, one lineage, no driver loop):
 
     vocab_embeddings   <- concept ⋈ relationship ⋈ ancestor  (lifecycle 3.2)
     mentions           <- transcripts scan -> detect UDF -> salted groupBy
-    links              <- mentions -> broadcast knn + rerank  (mapInPandas)
+    links              <- mentions -> file-backed knn + rerank  (mapInPandas)
     graph              <- accepted links -> CC -> nodes/edges merge-upsert
 """
 

@@ -3,8 +3,10 @@
 Single-query path used by the reference's search/manual-mapping pages
 (reference src/backend/auto_mapper.py:29-59 -> vector_store.py:24-38):
 embed the query, apply Qdrant-style filters, return the cosine top-k with
-denormalized metadata — the same kernel the distributed pipeline uses, so
-interactive results always agree with batch results.
+denormalized metadata.  Ranking goes through the linker's own top-k kernel
+(``knn._blocked_topk``: per-pair scores, (-score, concept_id) ties), so a
+search returns the candidates, order and scores ``link_batch`` retrieves
+for the same text.
 
 Filter semantics reproduce ``VectorDatabase._create_filters``
 (vector_store.py:141-156): scalar value -> MatchValue (equality), list ->
@@ -18,7 +20,11 @@ from __future__ import annotations
 import numpy as np
 
 from omop_concept_automapper_spark.functions.embedder import embed_texts
-from omop_concept_automapper_spark.operators.similarity import pinned_topk
+from omop_concept_automapper_spark.operators.knn import (
+    _blocked_topk,
+    _decode_idx,
+    _decode_score,
+)
 
 
 def _filter_mask(index: dict, filters: dict) -> np.ndarray:
@@ -66,14 +72,14 @@ def search_similar_concepts(
     filters["type"] = "standard"  # always-on (auto_mapper.py:49)
 
     mask = _filter_mask(index, filters)
-    qvec = embed_texts([query])[0]
-    scores = index["matrix"] @ qvec
-    scores = np.where(mask, scores, -np.inf)
-    _, top = pinned_topk(scores[None, :], index["concept_id"], k)
+    keys, n_valid = _blocked_topk(
+        embed_texts([query]), index["matrix"], k, mask, block_rows=65536
+    )
+    keys = keys[0, : n_valid[0]]
     out = []
-    for j in top:
+    for j, score in zip(_decode_idx(keys), _decode_score(keys)):
         row = {
-            "score": float(scores[j]),
+            "score": float(score),
             "text": str(index["concept_name"][j]),
             "concept_id": int(index["concept_id"][j]),
             "concept_name": str(index["concept_name"][j]),

@@ -130,6 +130,35 @@ def test_streaming_wiring_lives_in_the_fold_driver():
             assert name not in wiring, f"{path.name}:{node.lineno} uses {name}"
 
 
+def test_one_function_drives_the_linker():
+    """Exactly one function of the package calls ``link_batch`` and runs
+    the ``mapInPandas`` that yields ``LINK_RESULT_SCHEMA`` rows — the link
+    driver.  A second caller would be a second linker, with its own spread,
+    index loading and plan to keep in step."""
+    pkg = Path(entry_mod.__file__).parent / "omop_concept_automapper_spark"
+    callers: dict[str, set[str]] = {"link_batch": set(), "mapInPandas": set()}
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        tops = [n for n in tree.body if isinstance(n, ast.FunctionDef)] + [
+            m for c in tree.body if isinstance(c, ast.ClassDef)
+            for m in c.body if isinstance(m, ast.FunctionDef)
+        ]
+        for top in tops:
+            for call in ast.walk(top):
+                if not isinstance(call, ast.Call):
+                    continue
+                f = call.func
+                callee = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                args = call.args + [kw.value for kw in call.keywords]
+                if callee == "link_batch" or (
+                    callee == "mapInPandas"
+                    and any(getattr(a, "id", "") == "LINK_RESULT_SCHEMA" for a in args)
+                ):
+                    callers[callee].add(f"{path.relative_to(pkg)}::{top.name}")
+    assert len(callers["link_batch"]) == 1, callers
+    assert callers["mapInPandas"] == callers["link_batch"], callers
+
+
 def test_benchmark_patch_targets_exist():
     """``perfbench/workloads.py::pipeline_patches`` wraps runner globals,
     ``Pipeline`` stages and catalog methods by name; a name the program no

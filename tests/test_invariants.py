@@ -999,3 +999,21 @@ def test_remap_across_folds_equals_from_scratch(spark, tmp_path):
     assert sorted(
         map(tuple, nodes.where(F.col("node_id") != "c:9001").collect())
     ) == sorted(map(tuple, out_s["nodes"].collect()))
+
+
+def test_build_with_nothing_to_link_completes(spark, tmp_path):
+    """A build that accepts no link (no transcripts) and a build over an
+    empty vocabulary (a domain filter no concept passes: zero hits for
+    every mention) both complete with empty links, edges and nodes."""
+    transcripts = transcripts_dataframe(spark, n_conversations=5)
+    for name, turns, cfg in (
+        ("no_turns", transcripts.limit(0), PipelineConfig()),
+        ("no_vocab", transcripts, PipelineConfig(domain_filter="NoSuchDomain")),
+    ):
+        wh = Warehouse(spark, str(tmp_path / name))
+        out = Pipeline(spark, wh, cfg).run(
+            turns, *vocab_dataframes(spark), build_lexicon()
+        )
+        for table in ("links", "edges", "nodes"):
+            assert out[table].count() == 0, (name, table)
+        assert out["mentions"].count() > 0 or name == "no_turns"

@@ -1,8 +1,8 @@
-"""Property-based tests for the blocked/sharded top-k kernel (pure numpy —
-no Spark session needed): any sharding/blocking configuration must produce
-exactly the brute-force (-score, concept_id) ranking, any batching of the
-mentions the same link rows, and the kernel's memory stays bounded by its
-query chunk."""
+"""Property-based tests for the blocked top-k kernel (pure numpy — no
+Spark session needed): any blocking must produce exactly the brute-force
+(-score, concept_id) ranking, any batching of the mentions the same link
+rows, interactive search the linker's ranking, and the kernel's memory
+stays bounded by its query chunk."""
 
 from __future__ import annotations
 
@@ -21,6 +21,7 @@ from omop_concept_automapper_spark.operators.knn import (
     build_vocab_index,
     link_batch,
 )
+from omop_concept_automapper_spark.plans.search import search_similar_concepts
 
 
 def _brute_topk(q, matrix, k, mask):
@@ -63,7 +64,7 @@ def test_blocked_topk_equals_bruteforce(n_vocab, k, block_rows, seed, mask_frac)
     if not mask.any():
         mask[0] = True
 
-    keys, counts = _blocked_topk(q, [(0, matrix)], k, mask, block_rows)
+    keys, counts = _blocked_topk(q, matrix, k, mask, block_rows)
     neg_inf_key = _order_keys(
         np.float32(-np.inf).reshape(1, 1), np.zeros(1, np.int64)
     )[0, 0]
@@ -73,33 +74,6 @@ def test_blocked_topk_equals_bruteforce(n_vocab, k, block_rows, seed, mask_frac)
         got = [int(i) for i in _decode_idx(got_keys)]
         assert got == wants[qi], (got, wants[qi])
         assert counts[qi] == min(k, int(mask.sum()))
-
-
-@given(
-    n_vocab=st.integers(8, 60),
-    n_shards=st.integers(2, 5),
-    block_rows=st.integers(2, 8),
-    seed=st.integers(0, 10_000),
-)
-@settings(max_examples=40, deadline=None, derandomize=True)
-def test_shard_split_invariance(n_vocab, n_shards, block_rows, seed):
-    """Block-aligned shard splits never change the result set."""
-    rng = np.random.default_rng(seed)
-    matrix = rng.standard_normal((n_vocab, 8)).astype(np.float32)
-    matrix[2] = matrix[0]  # tie
-    q = rng.standard_normal((2, 8)).astype(np.float32)
-    k = 7
-
-    full_keys, _ = _blocked_topk(q, [(0, matrix)], k, None, block_rows)
-    # block-aligned shard bounds
-    n_blocks = -(-n_vocab // block_rows)
-    bps = -(-n_blocks // n_shards)
-    bounds = list(range(0, n_vocab, bps * block_rows)) + [n_vocab]
-    shards = [
-        (a, matrix[a:b]) for a, b in zip(bounds[:-1], bounds[1:]) if b > a
-    ]
-    shard_keys, _ = _blocked_topk(q, shards, k, None, block_rows)
-    assert np.array_equal(full_keys, shard_keys)
 
 
 def _near_tie_vocab(n_concepts: int, seed: int) -> pd.DataFrame:
@@ -129,18 +103,13 @@ def _near_tie_vocab(n_concepts: int, seed: int) -> pd.DataFrame:
     )
 
 
-def test_link_batch_is_batch_independent():
-    """A mention's candidates, chosen concept and score are a function of
-    the mention alone: linking in one batch, in four slices and one row at
-    a time gives identical rows.  The parallel link split changes which
-    mentions share a batch, so this is what keeps that split exact."""
-    vocab = _near_tie_vocab(2000, seed=7)
-    index = build_vocab_index(vocab)
+def _near_tie_mentions(vocab: pd.DataFrame) -> pd.DataFrame:
+    """600 non-drug mentions drawn from the vocabulary's names."""
     rng = np.random.default_rng(11)
     texts = list(rng.choice(vocab["concept_name"].to_numpy(), size=600, replace=False))
     # typos (a dropped character) keep exact matches from deciding every row
     texts = [t[:-1] if i % 3 == 0 else t for i, t in enumerate(texts)]
-    mentions = pd.DataFrame(
+    return pd.DataFrame(
         {
             "mention_id": np.arange(len(texts), dtype=np.int64),
             "mention_text": texts,
@@ -148,6 +117,16 @@ def test_link_batch_is_batch_independent():
             "atc7": [""] * len(texts),
         }
     )
+
+
+def test_link_batch_is_batch_independent():
+    """A mention's candidates, chosen concept and score are a function of
+    the mention alone: linking in one batch, in four slices and one row at
+    a time gives identical rows.  The parallel link split changes which
+    mentions share a batch, so this is what keeps that split exact."""
+    vocab = _near_tie_vocab(2000, seed=7)
+    index = build_vocab_index(vocab)
+    mentions = _near_tie_mentions(vocab)
     cols = ["mention_id", "concept_id", "score", "candidate_ids"]
 
     def linked(parts):
@@ -168,6 +147,24 @@ def test_link_batch_is_batch_independent():
         )
 
 
+def test_search_ranks_like_the_linker():
+    """Interactive search returns, for every mention text, the linker's
+    candidates in the linker's order, and the linker's score at the
+    concept it chose — on a vocabulary full of float32 near ties, where a
+    gemm ranking disagrees with the per-pair one."""
+    vocab = _near_tie_vocab(2000, seed=7)
+    index = build_vocab_index(vocab)
+    mentions = _near_tie_mentions(vocab)
+    links = link_batch(mentions, index)
+    for text, cands, chosen, score in zip(
+        links["mention_text"], links["candidate_ids"], links["concept_id"],
+        links["score"],
+    ):
+        hits = search_similar_concepts(index, text, k=15)
+        assert [h["concept_id"] for h in hits] == list(cands), text
+        assert {h["concept_id"]: h["score"] for h in hits}[chosen] == score, text
+
+
 def test_blocked_topk_memory_is_bounded_by_the_query_chunk():
     """2048 queries x 8192 unit vectors: scoring a chunk of queries at a
     time keeps the traced peak a few chunk x block working sets — a single
@@ -181,7 +178,7 @@ def test_blocked_topk_memory_is_bounded_by_the_query_chunk():
     q, matrix = unit(2048), unit(8192)
     tracemalloc.start()
     try:
-        keys, counts = _blocked_topk(q, [(0, matrix)], 30, None, 65536)
+        keys, counts = _blocked_topk(q, matrix, 30, None, 65536)
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()

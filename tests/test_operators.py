@@ -200,58 +200,6 @@ def test_knn_domain_filter():
     assert set(out.iloc[0]["candidate_ids"]) == {1, 2}
 
 
-def test_sharded_index_exact_equality(spark):
-    """Sharded broadcasts (full-OMOP path) must produce EXACTLY the
-    single-matrix results — tie keys make shard merges order-stable."""
-    from omop_concept_automapper_spark.fixtures.transcripts import (
-        transcripts_dataframe,
-    )
-    from omop_concept_automapper_spark.fixtures.vocabulary import (
-        build_lexicon,
-        vocab_dataframes,
-    )
-    from omop_concept_automapper_spark.operators.knn import link_mentions
-    from omop_concept_automapper_spark.plans.mentions import (
-        build_mention_table,
-        extract_mention_occurrences,
-    )
-    from omop_concept_automapper_spark.plans.vocab_prep import (
-        build_vocab_embeddings,
-    )
-
-    lexicon = build_lexicon()
-    vocab_pdf = (
-        build_vocab_embeddings(*vocab_dataframes(spark))
-        .select("concept_id", "concept_name", "domain_id", "atc7_codes", "vector")
-        .toPandas()
-    )
-    t = transcripts_dataframe(spark, n_conversations=30)
-    occ = extract_mention_occurrences(t, [e["mention_text"] for e in lexicon])
-    mentions = build_mention_table(spark, occ, lexicon)
-
-    def result(n_shards):
-        rows = (
-            # block_rows=32 so the 150-row fixture vocab spans several
-            # blocks; shard bounds align to block multiples, making every
-            # configuration issue bitwise-identical gemm calls
-            link_mentions(
-                spark, mentions, vocab_pdf, n_shards=n_shards, block_rows=32
-            )
-            .select("mention_id", "concept_id", "confidence", "candidate_ids")
-            .collect()
-        )
-        return {
-            (r["mention_id"], r["concept_id"], r["confidence"],
-             tuple(r["candidate_ids"] or []))
-            for r in rows
-        }
-
-    base = result(1)
-    assert base
-    assert result(3) == base
-    assert result(5) == base  # uneven final shard
-
-
 def test_knn_topk_truncates_and_orders():
     index = _tiny_index()
     pdf = pd.DataFrame(

@@ -122,10 +122,14 @@ def test_adaptive_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
 
 
-def test_linker_single_pass_no_extra_shuffle(spark):
-    """links plan: exactly the salted two-phase agg exchanges + the
-    mapInPandas — no shuffle between retrieval and rerank (they fuse)."""
-    import pandas as pd
+def test_linker_plan_is_one_spread_and_one_map_in_pandas(spark, tmp_path):
+    """Both linker entry points (broadcast and file-backed index) over a
+    mention table with exchanges of its own and over a one-file mention
+    table: exactly one MapInPandas, one RoundRobinPartitioning over at
+    least defaultParallelism partitions directly under it, and no exchange
+    beyond the input plan's own plus that spread — retrieval and rerank
+    fuse in one task."""
+    import re
 
     from omop_concept_automapper_spark.fixtures.transcripts import (
         transcripts_dataframe,
@@ -134,7 +138,11 @@ def test_linker_single_pass_no_extra_shuffle(spark):
         build_lexicon,
         vocab_dataframes,
     )
-    from omop_concept_automapper_spark.operators.knn import link_mentions
+    from omop_concept_automapper_spark.operators.knn import (
+        build_vocab_index_files,
+        link_mentions,
+        link_mentions_file_index,
+    )
     from omop_concept_automapper_spark.plans.mentions import (
         build_mention_table,
         extract_mention_occurrences,
@@ -144,59 +152,37 @@ def test_linker_single_pass_no_extra_shuffle(spark):
     )
 
     lexicon = build_lexicon()
-    vocab_pdf = (
-        build_vocab_embeddings(*vocab_dataframes(spark))
-        .select("concept_id", "concept_name", "domain_id", "atc7_codes", "vector")
-        .toPandas()
-    )
-    t = transcripts_dataframe(spark, n_conversations=5)
-    occ = extract_mention_occurrences(t, [e["mention_text"] for e in lexicon])
-    mentions = build_mention_table(spark, occ, lexicon)
-    links = link_mentions(spark, mentions, vocab_pdf)
-    simple = plan_str(links, mode="simple")
-    # exchanges: salt partial->final (2) + broadcast for the lexicon meta join;
-    # retrieval+rerank contribute ZERO additional exchanges
-    n_exchanges = simple.count("Exchange")
-    assert n_exchanges <= 3, simple
-    assert simple.count("MapInPandas") == 1
-
-
-def test_file_index_linker_spreads_over_every_core(spark, tmp_path):
-    """The file-index linker round-robins its input over at least
-    defaultParallelism partitions directly under its one MapInPandas, so a
-    one-file mention table no longer links in a single task."""
-    import re
-
-    from omop_concept_automapper_spark.fixtures.vocabulary import vocab_dataframes
-    from omop_concept_automapper_spark.operators.knn import (
-        build_vocab_index_files,
-        link_mentions_file_index,
-    )
-    from omop_concept_automapper_spark.plans.vocab_prep import (
-        build_vocab_embeddings,
-    )
-
     vocab = build_vocab_embeddings(*vocab_dataframes(spark)).select(
         "concept_id", "concept_name", "domain_id", "atc7_codes", "vector"
     )
+    vocab_pdf = vocab.toPandas()
     idx_dirs = build_vocab_index_files(vocab, str(tmp_path / "vocab_index"))
+    t = transcripts_dataframe(spark, n_conversations=5)
+    occ = extract_mention_occurrences(t, [e["mention_text"] for e in lexicon])
+    built = build_mention_table(spark, occ, lexicon)
     spark.createDataFrame(
         [(i, 0, f"mention {i}", False, "") for i in range(40)],
         "mention_id long, mention_id2 long, mention_text string, "
         "is_drug boolean, atc7 string",
     ).coalesce(1).write.parquet(str(tmp_path / "mentions"))
-    mentions = spark.read.parquet(str(tmp_path / "mentions"))
-    assert mentions.rdd.getNumPartitions() == 1
+    one_file = spark.read.parquet(str(tmp_path / "mentions"))
+    assert one_file.rdd.getNumPartitions() == 1
 
-    lines = plan_str(
-        link_mentions_file_index(spark, mentions, idx_dirs), mode="simple"
-    ).splitlines()
-    rr = [i for i, line in enumerate(lines) if "RoundRobinPartitioning" in line]
-    assert len(rr) == 1, lines
-    n = int(re.search(r"RoundRobinPartitioning\((\d+)\)", lines[rr[0]]).group(1))
-    assert n >= spark.sparkContext.defaultParallelism
-    assert sum("MapInPandas" in line for line in lines) == 1
-    assert "MapInPandas" in lines[rr[0] - 1], lines
+    for mentions in (built, one_file):
+        n_input = plan_str(mentions, mode="simple").count("Exchange")
+        for links in (
+            link_mentions(spark, mentions, vocab_pdf),
+            link_mentions_file_index(spark, mentions, idx_dirs),
+        ):
+            simple = plan_str(links, mode="simple")
+            lines = simple.splitlines()
+            assert sum("MapInPandas" in line for line in lines) == 1, simple
+            rr = [i for i, ln in enumerate(lines) if "RoundRobinPartitioning" in ln]
+            assert len(rr) == 1, simple
+            assert "MapInPandas" in lines[rr[0] - 1], simple
+            n = int(re.search(r"RoundRobinPartitioning\((\d+)\)", lines[rr[0]])[1])
+            assert n >= spark.sparkContext.defaultParallelism
+            assert simple.count("Exchange") <= n_input + 1, simple
 
 
 def test_resume_noop_fold_runs_no_link_job(spark, tmp_path, monkeypatch):
