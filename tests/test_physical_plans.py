@@ -122,44 +122,67 @@ def test_adaptive_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
 
 
-def test_linker_plan_is_one_spread_and_one_map_in_pandas(spark, tmp_path):
-    """Both linker entry points (broadcast and file-backed index) over a
-    mention table with exchanges of its own and over a one-file mention
-    table: exactly one MapInPandas, one RoundRobinPartitioning over at
+def _assert_linker_plans(spark, mentions, tmp_path):
+    """Both linker entry points (broadcast and file-backed index) over
+    `mentions`: exactly one MapInPandas, one RoundRobinPartitioning over at
     least defaultParallelism partitions directly under it, and no exchange
     beyond the input plan's own plus that spread — retrieval and rerank
     fuse in one task."""
     import re
 
-    from omop_concept_automapper_spark.fixtures.transcripts import (
-        transcripts_dataframe,
-    )
-    from omop_concept_automapper_spark.fixtures.vocabulary import (
-        build_lexicon,
-        vocab_dataframes,
-    )
+    from omop_concept_automapper_spark.fixtures.vocabulary import vocab_dataframes
     from omop_concept_automapper_spark.operators.knn import (
         build_vocab_index_files,
         link_mentions,
         link_mentions_file_index,
     )
-    from omop_concept_automapper_spark.plans.mentions import (
-        build_mention_table,
-        extract_mention_occurrences,
-    )
     from omop_concept_automapper_spark.plans.vocab_prep import (
         build_vocab_embeddings,
     )
 
-    lexicon = build_lexicon()
     vocab = build_vocab_embeddings(*vocab_dataframes(spark)).select(
         "concept_id", "concept_name", "domain_id", "atc7_codes", "vector"
     )
     vocab_pdf = vocab.toPandas()
     idx_dirs = build_vocab_index_files(vocab, str(tmp_path / "vocab_index"))
+    n_input = plan_str(mentions, mode="simple").count("Exchange")
+    for links in (
+        link_mentions(spark, mentions, vocab_pdf),
+        link_mentions_file_index(spark, mentions, idx_dirs),
+    ):
+        simple = plan_str(links, mode="simple")
+        lines = simple.splitlines()
+        assert sum("MapInPandas" in line for line in lines) == 1, simple
+        rr = [i for i, ln in enumerate(lines) if "RoundRobinPartitioning" in ln]
+        assert len(rr) == 1, simple
+        assert "MapInPandas" in lines[rr[0] - 1], simple
+        n = int(re.search(r"RoundRobinPartitioning\((\d+)\)", lines[rr[0]])[1])
+        assert n >= spark.sparkContext.defaultParallelism
+        assert simple.count("Exchange") <= n_input + 1, simple
+
+
+def test_linker_single_pass_no_extra_shuffle(spark, tmp_path):
+    """Over a built mention table (which has exchanges of its own) neither
+    linker adds a shuffle beyond its one spread under the MapInPandas."""
+    from omop_concept_automapper_spark.fixtures.transcripts import (
+        transcripts_dataframe,
+    )
+    from omop_concept_automapper_spark.fixtures.vocabulary import build_lexicon
+    from omop_concept_automapper_spark.plans.mentions import (
+        build_mention_table,
+        extract_mention_occurrences,
+    )
+
+    lexicon = build_lexicon()
     t = transcripts_dataframe(spark, n_conversations=5)
     occ = extract_mention_occurrences(t, [e["mention_text"] for e in lexicon])
-    built = build_mention_table(spark, occ, lexicon)
+    _assert_linker_plans(spark, build_mention_table(spark, occ, lexicon), tmp_path)
+
+
+def test_file_index_linker_spreads_over_every_core(spark, tmp_path):
+    """A one-file mention table is round-robined over at least
+    defaultParallelism partitions by both linkers, so it no longer links
+    in a single task."""
     spark.createDataFrame(
         [(i, 0, f"mention {i}", False, "") for i in range(40)],
         "mention_id long, mention_id2 long, mention_text string, "
@@ -167,22 +190,7 @@ def test_linker_plan_is_one_spread_and_one_map_in_pandas(spark, tmp_path):
     ).coalesce(1).write.parquet(str(tmp_path / "mentions"))
     one_file = spark.read.parquet(str(tmp_path / "mentions"))
     assert one_file.rdd.getNumPartitions() == 1
-
-    for mentions in (built, one_file):
-        n_input = plan_str(mentions, mode="simple").count("Exchange")
-        for links in (
-            link_mentions(spark, mentions, vocab_pdf),
-            link_mentions_file_index(spark, mentions, idx_dirs),
-        ):
-            simple = plan_str(links, mode="simple")
-            lines = simple.splitlines()
-            assert sum("MapInPandas" in line for line in lines) == 1, simple
-            rr = [i for i, ln in enumerate(lines) if "RoundRobinPartitioning" in ln]
-            assert len(rr) == 1, simple
-            assert "MapInPandas" in lines[rr[0] - 1], simple
-            n = int(re.search(r"RoundRobinPartitioning\((\d+)\)", lines[rr[0]])[1])
-            assert n >= spark.sparkContext.defaultParallelism
-            assert simple.count("Exchange") <= n_input + 1, simple
+    _assert_linker_plans(spark, one_file, tmp_path)
 
 
 def test_resume_noop_fold_runs_no_link_job(spark, tmp_path, monkeypatch):
